@@ -22,6 +22,7 @@ the engine its audio payload validation capability
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 CODECS = ("pcm_s16le", "pcm_f32le", "ulaw", "alaw")
 
@@ -238,6 +239,36 @@ def decode(raw: bytes, codec: str) -> np.ndarray:
 
 def bytes_per_sample(codec: str) -> int:
     return _BYTES_PER_SAMPLE[codec]
+
+
+def codec_groups(raw_col: np.ndarray, codec_col: np.ndarray, allow_empty: bool = False):
+    """Yield ``(idx, lens, seg, pcm)`` for each decodable codec group of one
+    Arrow batch — the one decode path of every audio kernel.
+
+    ``idx`` holds the batch rows whose payload decodes under their declared
+    codec: a known codec, a whole number of samples, and at least one byte
+    unless ``allow_empty``. ``lens`` is each row's sample count and ``seg``
+    its start offset in ``pcm``, the float32 decode of the group's payloads
+    concatenated: every codec here is an elementwise map, so one decode per
+    group replaces one per clip, and per-clip reductions are
+    ``np.add.reduceat(x, seg)``. Rows outside every group (null, torn,
+    unknown codec) are the caller's ``decode_ok=False``.
+    """
+    byte_lens = np.array([len(r) if r is not None else -1 for r in raw_col], dtype=np.int64)
+    min_bytes = 0 if allow_empty else 1
+    for codec in pd.unique(codec_col):
+        if codec not in CODECS:
+            continue
+        bps = _BYTES_PER_SAMPLE[codec]
+        idx = np.flatnonzero(
+            (codec_col == codec) & (byte_lens >= min_bytes) & (byte_lens % bps == 0)
+        )
+        if idx.size == 0:
+            continue
+        lens = byte_lens[idx] // bps
+        seg = np.zeros(idx.size, dtype=np.int64)
+        np.cumsum(lens[:-1], out=seg[1:])
+        yield idx, lens, seg, decode(b"".join(raw_col[i] for i in idx), codec)
 
 
 def snr_db(ref: np.ndarray, test: np.ndarray) -> float:

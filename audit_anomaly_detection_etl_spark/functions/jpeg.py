@@ -15,7 +15,10 @@ Decoder scope (rejections are explicit ``JpegError``, never wrong pixels):
   lossless frames are refused
 - 1-component (grayscale) and 3-component (YCbCr) scans, any sampling
   factors in {1,2}x{1,2} (4:4:4, 4:2:2, 4:4:0, 4:2:0); single interleaved
-  scan; restart markers (DRI/RSTn) supported
+  scan; restart markers (DRI/RSTn) supported. A 3-component frame must
+  name its components 1, 2, 3 (JFIF's Y, Cb, Cr) and carry no Adobe APP14
+  ``transform=0``: those mark RGB-coded data, refused rather than pushed
+  through the YCbCr transform into wrong colours
 - bomb-safe like decode_png: SOF dimensions are capped at ``max_pixels``
   BEFORE any allocation, and the entropy decode is bounded by the MCU
   count the header implies
@@ -253,6 +256,7 @@ def decode_jpeg(raw: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
     huffs: dict[tuple[int, int], dict] = {}  # (class, id) -> code table
     frame = None  # (h, w, [(cid, hi, vi, tq)])
     dri = 0
+    adobe_rgb = False  # Adobe APP14 transform=0: components are not YCbCr
     i = 2
     n = len(raw)
     while True:
@@ -301,6 +305,8 @@ def decode_jpeg(raw: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
                 if hi not in (1, 2) or vi not in (1, 2):
                     raise JpegError(f"unsupported sampling {hi}x{vi}")
                 comps.append((cid, hi, vi, tq))
+            if nf == 3 and {c[0] for c in comps} != {1, 2, 3}:
+                raise JpegError("3-component frame without YCbCr ids 1,2,3")
             frame = (h, w, comps)
         elif marker == 0xC4:  # DHT
             j = 0
@@ -341,9 +347,13 @@ def decode_jpeg(raw: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
             if len(body) != 2:
                 raise JpegError("bad DRI")
             (dri,) = struct.unpack(">H", body)
+        elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
+            adobe_rgb = body[11] == 0
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise JpegError("SOS before SOF")
+            if adobe_rgb and len(frame[2]) == 3:
+                raise JpegError("Adobe APP14 transform=0 (RGB-coded frame)")
             return _decode_scan(raw, i, body, frame, quant, huffs, dri)
         # else: APPn/COM/other tables — skipped
 

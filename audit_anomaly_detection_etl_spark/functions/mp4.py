@@ -130,6 +130,8 @@ def parse_mp4(raw: bytes) -> dict:
                 if tkhd is None:
                     raise Mp4Error("video trak without tkhd")
                 kb, ke = tkhd
+                if ke - kb < 1:  # the version byte itself is missing
+                    raise Mp4Error("short tkhd")
                 v = raw[kb]
                 # 16.16 fixed-point width/height at FIXED spec offsets
                 # (v0 body: 4 ver/flags + 72 = 76; v1: +12) — never

@@ -31,6 +31,21 @@ VIOLATION_SCHEMA = StructType(
 VIOLATION_COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 
 
+def violation_rows(df, check: str, detail, severity: float, key: str = "clip_id"):
+    """The VIOLATION_SCHEMA projection every check ends in: one row per row
+    of ``df`` (already filtered to the violating rows), under the constant
+    ``check`` name and ``severity``, with ``detail`` a string Column."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        F.col(key).alias("key"),
+        F.lit(check).alias("check"),
+        detail.alias("detail"),
+        F.col("part").cast("int").alias("part"),
+        F.lit(severity).alias("severity"),
+    )
+
+
 def remap_key_part(df, key_col: str, part_col: str):
     """Map a spec's custom key/part columns onto the ``clip_id``/``part``
     names the media/payload internals hardcode — via a single ``select``,

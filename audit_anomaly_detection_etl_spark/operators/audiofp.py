@@ -115,7 +115,7 @@ def fingerprints(clips: DataFrame) -> DataFrame:
     media.wav_consistency_violations, not here.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fingerprint_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, parts, hs, ts = [], [], [], []
             for cid, part, raw, codec, sr in zip(
@@ -145,7 +145,7 @@ def fingerprints(clips: DataFrame) -> DataFrame:
                 )
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=FINGERPRINT_SCHEMA)
+    return pruned.mapInPandas(fingerprint_kernel, schema=FINGERPRINT_SCHEMA)
 
 
 def neardup_pairs(

@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codecs
-from . import remap_key_part
 
 AUDIO_FEATURES_SCHEMA = (
     "clip_id string, part int, decode_ok boolean, n_samples long, "
@@ -66,15 +65,12 @@ def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
     the silence-trim step should have removed).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def audio_features_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
             raw_col = pdf["bytes"].to_numpy()
             codec_col = pdf["codec"].to_numpy()
             sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
             decode_ok = np.zeros(n, dtype=bool)
             n_samples = np.zeros(n, dtype=np.int64)
             rms = np.full(n, np.nan)
@@ -84,19 +80,8 @@ def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
             clip_ratio = np.full(n, np.nan)
             sil_ratio = np.full(n, np.nan)
 
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(b"".join(raw_col[i] for i in idx), codec).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
+            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
+                pcm = pcm.astype(np.float64)
                 decode_ok[idx] = True
                 n_samples[idx] = lens
                 energy = np.add.reduceat(pcm**2, seg)
@@ -146,7 +131,7 @@ def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
     schema = AUDIO_FEATURES_EXT_SCHEMA if extended else AUDIO_FEATURES_SCHEMA
-    return pruned.mapInPandas(batches, schema=schema)
+    return pruned.mapInPandas(audio_features_kernel, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +175,7 @@ def image_metadata(images: DataFrame, id_col: str = "image_id", bytes_col: str =
     (no pixel decode): format + dimensions from container headers.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def image_metadata_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             metas = [_sniff_image(r) for r in pdf[bytes_col].to_numpy()]
             yield pd.DataFrame(
@@ -203,7 +188,9 @@ def image_metadata(images: DataFrame, id_col: str = "image_id", bytes_col: str =
                 }
             )
 
-    return images.select(id_col, bytes_col).mapInPandas(batches, schema=IMAGE_META_SCHEMA)
+    return images.select(id_col, bytes_col).mapInPandas(
+        image_metadata_kernel, schema=IMAGE_META_SCHEMA
+    )
 
 
 IMAGE_FEATURES_SCHEMA = (
@@ -240,7 +227,7 @@ def image_features(
     if decoder not in ("auto", "png", "jpeg", "stub", "fake"):
         raise ValueError(f"unknown decoder: {decoder!r}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def image_features_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.jpeg import JpegError, decode_jpeg
         from ..functions.png import PngError, decode_png
 
@@ -307,7 +294,9 @@ def image_features(
                 }
             )
 
-    return images.select(id_col, bytes_col).mapInPandas(batches, schema=IMAGE_FEATURES_SCHEMA)
+    return images.select(id_col, bytes_col).mapInPandas(
+        image_features_kernel, schema=IMAGE_FEATURES_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -332,7 +321,7 @@ def video_metadata(
     ``parse_error`` without any codec library. Frame *decode* remains the
     one stubbed step (see image_features / frame_sample_plan)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def video_metadata_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.mp4 import Mp4Error, parse_mp4
 
         for pdf in it:
@@ -370,7 +359,7 @@ def video_metadata(
             yield pd.DataFrame(out)
 
     return videos.select(id_col, bytes_col).mapInPandas(
-        batches, schema=VIDEO_METADATA_SCHEMA
+        video_metadata_kernel, schema=VIDEO_METADATA_SCHEMA
     )
 
 
@@ -428,7 +417,7 @@ def wav_metadata(wavs: DataFrame, id_col: str = "clip_id", bytes_col: str = "byt
     ``mapInPandas`` pass; O(#chunks) per clip, no per-sample work.
     """
 
-    def batches(it):
+    def wav_metadata_kernel(it):
         for pdf in it:
             rows = []
             for cid, part, raw in zip(
@@ -458,7 +447,7 @@ def wav_metadata(wavs: DataFrame, id_col: str = "clip_id", bytes_col: str = "byt
             yield pd.DataFrame(rows)
 
     cols = [id_col, bytes_col] + (["part"] if "part" in wavs.columns else [])
-    return wavs.select(*cols).mapInPandas(batches, WAV_METADATA_SCHEMA)
+    return wavs.select(*cols).mapInPandas(wav_metadata_kernel, WAV_METADATA_SCHEMA)
 
 
 def wav_consistency_violations(
@@ -592,7 +581,7 @@ def resample_audio(
     bytes — the caller quarantines them, the stage never throws.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resample_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for cid, part, raw, sr, codec in zip(
@@ -618,7 +607,7 @@ def resample_audio(
     cols = ["clip_id", "bytes", "sr_hz", "codec"] + (
         ["part"] if "part" in clips.columns else []
     )
-    return clips.select(*cols).mapInPandas(batches, RESAMPLE_SCHEMA)
+    return clips.select(*cols).mapInPandas(resample_kernel, RESAMPLE_SCHEMA)
 
 
 TRIM_SCHEMA = (
@@ -642,7 +631,7 @@ def trim_silence_bounds(
     can quarantine or drop it.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def trim_silence_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for cid, part, raw, sr, codec in zip(
@@ -681,64 +670,7 @@ def trim_silence_bounds(
     cols = ["clip_id", "bytes", "sr_hz", "codec"] + (
         ["part"] if "part" in clips.columns else []
     )
-    return clips.select(*cols).mapInPandas(batches, TRIM_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# cross-modal consistency: transcript vs audio duration
-# ---------------------------------------------------------------------------
-
-
-def speaking_rate_violations(
-    clips: DataFrame,
-    min_wps: float = 0.3,
-    max_wps: float = 6.0,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-    transcript_col: str = "transcript",
-    dur_col: str = "dur_ms",
-) -> DataFrame:
-    """Transcript<->audio plausibility check: words-per-second outside
-    [min_wps, max_wps] means the transcript cannot belong to this clip
-    (truncated audio, concatenated transcript, misaligned pairing) even
-    when both sides individually pass their own checks. Human speech spans
-    roughly 1.5-4 wps; the default bounds are deliberately loose.
-
-    NULL/empty transcripts and non-positive durations are SKIPPED here —
-    they are already caught by the schema null/domain constraints, and a
-    rate violation on top would double-count the same defect.
-
-    Pure Catalyst (one codegen projection over the metadata columns — the
-    payload bytes are never touched), emitting standard violation rows at
-    severity 2.5 (below uniqueness/payload, above referential orphans).
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions import text as T
-
-    # try_divide: the measurable guard below excludes dur<=0 rows, but ANSI
-    # codegen may evaluate the shared wps subexpression before the guard
-    wps = F.try_divide(
-        F.size(T.words(F.col(transcript_col))), F.col(dur_col) / 1000.0
-    )
-    measurable = (
-        F.col(transcript_col).isNotNull()
-        & (F.length(F.trim(F.col(transcript_col))) > 0)
-        & F.col(dur_col).isNotNull()
-        & (F.col(dur_col) > 0)
-    )
-    bad = measurable & ((wps < min_wps) | (wps > max_wps))
-    return clips.where(bad).select(
-        F.col(key_col).alias("key"),
-        F.lit("speaking_rate").alias("check"),
-        F.concat(
-            F.lit("wps="),
-            F.round(wps, 2).cast("string"),
-            F.lit(f" outside [{min_wps}, {max_wps}]"),
-        ).alias("detail"),
-        F.col(part_col).cast("int").alias("part"),
-        F.lit(2.5).alias("severity"),
-    )
+    return clips.select(*cols).mapInPandas(trim_silence_kernel, TRIM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -783,7 +715,7 @@ def slice_segments(
 
     schema = SEGMENT_SLICE_SCHEMA + (", bytes binary" if emit_bytes else "")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def slice_segments_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids: list = []
             parts: list = []
@@ -850,7 +782,7 @@ def slice_segments(
             yield pd.DataFrame(out)
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=schema)
+    return pruned.mapInPandas(slice_segments_kernel, schema=schema)
 
 
 # codecs.decode returns normalized float PCM in [-1, 1) -> full scale is 1.0
@@ -910,46 +842,6 @@ def loudness_audit(
     )
 
 
-def loudness_violations(
-    clips: DataFrame,
-    target_dbfs: float = -20.0,
-    tolerance_db: float = 1.0,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-) -> DataFrame:
-    """Suite adapter for ``loudness_audit``: standard violation rows for
-    clips that CANNOT be loudness-normalized without hard-clipping
-    (verdict ``boost_clips``) — the quarantine set of a normalizing
-    pipeline. Undecodable clips are deliberately NOT re-reported here (the
-    codec/payload checks own that defect; same no-double-count rule as
-    speaking_rate). Severity 3.0: above referential orphans, below
-    uniqueness/payload corruption.
-
-    Cost note: this runs its own audio_features decode pass; enable it in a
-    suite that SKIPS the payload check, or accept a second decode of the
-    wave (the waves are checkpoint-bounded either way).
-    """
-    # audio_features/loudness_audit hardcode clip_id/part internally — map a
-    # custom key/part column onto those names first, so a spec with e.g.
-    # key_col="utt_id" resolves instead of failing UNRESOLVED_COLUMN
-    src = remap_key_part(clips, key_col, part_col)
-    audit = loudness_audit(audio_features(src), target_dbfs, tolerance_db)
-    bad = audit.where(F.col("verdict") == "boost_clips")
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("loudness").alias("check"),
-        F.concat(
-            F.lit("gain_db="),
-            F.round(F.col("gain_db"), 2).cast("string"),
-            F.lit(" exceeds headroom_db="),
-            F.round(F.col("headroom_db"), 2).cast("string"),
-            F.lit(f" normalizing to {target_dbfs} dBFS would clip"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(3.0).alias("severity"),
-    )
-
-
 TRANSCODE_QA_SCHEMA = (
     "clip_id string, part int, transcode_ok boolean, snr_db double, verdict string"
 )
@@ -989,31 +881,15 @@ def transcode_qa(
     """
     stateful = target_codec in codecs.STATEFUL_TRANSCODE_CODECS
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def transcode_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
             raw_col = pdf["bytes"].to_numpy()
             codec_col = pdf["codec"].to_numpy()
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
             ok = np.zeros(n, dtype=bool)
             snr = np.full(n, np.nan)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                ref = codecs.decode(
-                    b"".join(raw_col[i] for i in idx), codec
-                ).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
+            for idx, lens, seg, ref in codecs.codec_groups(raw_col, codec_col):
+                ref = ref.astype(np.float64)
                 if stateful:
                     rt = np.empty_like(ref)
                     for k in range(idx.size):
@@ -1055,7 +931,7 @@ def transcode_qa(
             )
 
     pruned = clips.select("clip_id", "part", "bytes", "codec")
-    return pruned.mapInPandas(batches, schema=TRANSCODE_QA_SCHEMA)
+    return pruned.mapInPandas(transcode_kernel, schema=TRANSCODE_QA_SCHEMA)
 
 
 def bandwidth_audit(
@@ -1163,32 +1039,17 @@ def dropout_audit(
     never over samples.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dropout_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
             raw_col = pdf["bytes"].to_numpy()
             codec_col = pdf["codec"].to_numpy()
             sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
             decode_ok = np.zeros(n, dtype=bool)
             n_drop = np.zeros(n, dtype=np.int32)
             max_ms = np.zeros(n, dtype=np.float64)
             tot_ms = np.zeros(n, dtype=np.float64)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(b"".join(raw_col[i] for i in idx), codec)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
+            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
                 decode_ok[idx] = True
                 last = seg + lens - 1
                 # NaN payloads (pcm_f32le corruption) compare False and so
@@ -1239,41 +1100,7 @@ def dropout_audit(
             )
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=DROPOUT_AUDIT_SCHEMA)
-
-
-def dropout_violations(
-    clips: DataFrame,
-    min_run_ms: float = 30.0,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-) -> DataFrame:
-    """Suite adapter for ``dropout_audit``: standard violation rows for
-    clips with at least one interior digital-silence run >= ``min_run_ms``.
-    Undecodable clips are deliberately NOT re-reported (the codec/payload
-    checks own that defect; same no-double-count rule as speaking_rate and
-    loudness). Severity 3.5: content corruption — above loudness
-    feasibility (3.0), below payload SNR failures (4.0).
-
-    Cost note: runs its own audio decode pass; enable it in a suite that
-    SKIPS the payload check, or accept a second decode of the wave (the
-    waves are checkpoint-bounded either way).
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = dropout_audit(src, min_run_ms=min_run_ms)
-    bad = audit.where(F.col("n_dropouts") > 0)
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("dropout").alias("check"),
-        F.concat(
-            F.lit("n_dropouts="),
-            F.col("n_dropouts").cast("string"),
-            F.lit(" max_dropout_ms="),
-            F.round("max_dropout_ms", 1).cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(3.5).alias("severity"),
-    )
+    return pruned.mapInPandas(dropout_kernel, schema=DROPOUT_AUDIT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1341,35 +1168,19 @@ def tonal_audit(
     corpus clips, per-codec, plus the q136 synth-fixture parity test).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def tonal_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
             raw_col = pdf["bytes"].to_numpy()
             codec_col = pdf["codec"].to_numpy()
             sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
             decode_ok = np.zeros(n, dtype=bool)
             n_used = np.zeros(n, dtype=np.int32)
             flat = np.full(n, np.nan)
             dom_hz = np.full(n, np.nan)
             dom_share = np.full(n, np.nan)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(
-                    b"".join(raw_col[i] for i in idx), codec
-                ).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
+            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
+                pcm = pcm.astype(np.float64)
                 decode_ok[idx] = True
 
                 def spectrum(P2, rows, m):
@@ -1447,40 +1258,7 @@ def tonal_audit(
             )
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=TONAL_AUDIT_SCHEMA)
-
-
-def tonal_violations(
-    clips: DataFrame,
-    flatness_threshold: float = _TONAL_FLATNESS_THRESHOLD,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-) -> DataFrame:
-    """Suite adapter for ``tonal_audit``: standard violation rows for clips
-    flagged as synthetic narrowband tones. Undecodable / too-short / silent
-    clips are NOT re-reported (codec, payload and loudness checks own those
-    defects — same no-double-count rule as dropout). Severity 2.5:
-    content-provenance suspicion — below content corruption (dropout 3.5)
-    and loudness feasibility (3.0); the clip itself is technically sound.
-
-    Cost note: runs its own audio decode pass (bounded at ``max_samples``
-    per clip); ingest-audit tier like codec_sniff, not an every-run check.
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = tonal_audit(src, flatness_threshold=flatness_threshold)
-    bad = audit.where(F.col("tonal"))
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("tonal").alias("check"),
-        F.concat(
-            F.lit("flatness="),
-            F.format_number(F.col("spectral_flatness"), 6),
-            F.lit(" dominant_hz="),
-            F.round("dominant_hz", 1).cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(2.5).alias("severity"),
-    )
+    return pruned.mapInPandas(tonal_kernel, schema=TONAL_AUDIT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1526,32 +1304,17 @@ def stutter_audit(
     silence exclusion, boundary/run-length semantics).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stutter_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
             raw_col = pdf["bytes"].to_numpy()
             codec_col = pdf["codec"].to_numpy()
             sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
             decode_ok = np.zeros(n, dtype=bool)
             n_runs = np.zeros(n, dtype=np.int32)
             max_rep = np.zeros(n, dtype=np.int32)
             tot_ms = np.zeros(n, dtype=np.float64)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(b"".join(raw_col[i] for i in idx), codec)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
+            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
                 decode_ok[idx] = True
                 for j in range(idx.size):
                     i = idx[j]
@@ -1596,36 +1359,4 @@ def stutter_audit(
             )
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=STUTTER_AUDIT_SCHEMA)
-
-
-def stutter_violations(
-    clips: DataFrame,
-    frame_ms: float = 20.0,
-    min_repeats: int = 3,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-) -> DataFrame:
-    """Suite adapter for ``stutter_audit``: violation rows for clips with
-    at least one stuck-buffer frame-repeat run. Undecodable clips are NOT
-    re-reported (codec/payload checks own that). Severity 3.5: content
-    corruption, same tier as dropout (the silent sibling).
-
-    Cost note: own decode pass — pair with a suite that skips payload, or
-    accept the second decode of the wave.
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = stutter_audit(src, frame_ms=frame_ms, min_repeats=min_repeats)
-    bad = audit.where(F.col("n_stutters") > 0)
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("stutter").alias("check"),
-        F.concat(
-            F.lit("n_stutters="),
-            F.col("n_stutters").cast("string"),
-            F.lit(" max_repeat_frames="),
-            F.col("max_repeat_frames").cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(3.5).alias("severity"),
-    )
+    return pruned.mapInPandas(stutter_kernel, schema=STUTTER_AUDIT_SCHEMA)

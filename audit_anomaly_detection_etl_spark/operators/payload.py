@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codecs
-from . import VIOLATION_COLS, remap_key_part
+from . import VIOLATION_COLS
 
 SNR_THRESHOLD_DB = 30.0
 
@@ -49,7 +49,7 @@ REPORT_SCHEMA = (
 )
 
 
-def _validate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def payload_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Whole-batch vectorized validation — the Python interpreter never loops
     over samples, and the per-clip math (decode, noise/signal energy) runs as
     ONE numpy op per codec group over the concatenation of all clips in the
@@ -79,26 +79,15 @@ def _validate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         has_ref = np.array([r is not None for r in ref_col], dtype=bool)
         transcript_null = pd.isna(pdf["transcript"]).to_numpy()
 
-        byte_lens = np.array([len(r) if r is not None else -1 for r in raw_col], dtype=np.int64)
         ref_lens = np.array([len(r) if r is not None else -1 for r in ref_col], dtype=np.int64)
         codec_col = pdf["codec"].to_numpy()
 
-        for codec in pd.unique(codec_col):
-            if codec not in codecs.CODECS:
-                continue  # decode_ok stays False: unknown codec
-            bps = codecs.bytes_per_sample(codec)
-            idx = np.flatnonzero(
-                (codec_col == codec) & (byte_lens >= 0) & (byte_lens % bps == 0)
-            )
-            if idx.size == 0:
-                continue  # torn payloads keep decode_ok False
+        # an EMPTY payload decodes (to zero samples) here; unknown-codec and
+        # torn payloads keep decode_ok False
+        for idx, lens, starts, pcm_all in codecs.codec_groups(
+            raw_col, codec_col, allow_empty=True
+        ):
             decode_ok[idx] = True
-            lens = byte_lens[idx] // bps
-            # one vectorized decode over the concatenation of every clip in
-            # this codec group (all codecs are elementwise maps)
-            pcm_all = codecs.decode(b"".join(raw_col[i] for i in idx), codec)
-            starts = np.zeros(idx.size, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
             sr = sr_col[idx]
             with np.errstate(divide="ignore", invalid="ignore"):
                 dur_ok[idx] = np.where(
@@ -185,7 +174,7 @@ def payload_report(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
     joined = clips.select("clip_id", "part", "bytes", "sr_hz", "dur_ms", "codec", "transcript").join(
         ref, "clip_id", "left"
     )
-    return joined.mapInPandas(_validate_batches, schema=REPORT_SCHEMA)
+    return joined.mapInPandas(payload_kernel, schema=REPORT_SCHEMA)
 
 
 def payload_violations(report: DataFrame) -> DataFrame:
@@ -288,45 +277,6 @@ def byte_length_audit(
     )
 
 
-def byte_length_violations(
-    clips: DataFrame,
-    tolerance_samples: int = 1,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-    report_unknown_codec: bool = True,
-) -> DataFrame:
-    """Suite adapter for ``byte_length_audit``: violation rows for payloads
-    whose byte length contradicts the declared metadata (truncated /
-    oversized / unknown codec). ``bad_meta`` rows are NOT re-reported — the
-    schema constraints own null/non-positive metadata (no-double-count rule,
-    like speaking_rate/loudness). For the same reason the runner passes
-    ``report_unknown_codec=False`` whenever the schema check is also
-    enabled: the allowed-codec domain constraint already owns declared-codec
-    validity, and a third report of the same defect would only inflate the
-    count. Severity 4.5: corruption-class, just under payload SNR failures.
-    Pure codegen — safe to enable on every wave (and default-ON: at 10^12
-    clips this is the cheapest violation source in the suite, catching
-    truncation before the expensive decode pass)."""
-    audit = byte_length_audit(clips, tolerance_samples, key_col, part_col)
-    skip = ("ok", "bad_meta") if report_unknown_codec else ("ok", "bad_meta", "unknown_codec")
-    bad = audit.where(~F.col("verdict").isin(*skip))
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("byte_length").alias("check"),
-        F.concat(
-            F.col("verdict"),
-            F.lit(": bytes="),
-            F.col("n_bytes").cast("string"),
-            F.lit(" expected="),
-            F.coalesce(F.col("expected_bytes").cast("string"), F.lit("?")),
-            F.lit(" delta_samples="),
-            F.coalesce(F.col("delta_samples").cast("string"), F.lit("?")),
-        ).alias("detail"),
-        F.col("part"),
-        F.lit(4.5).alias("severity"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # declared-codec plausibility sniff (mislabeled companding law)
 # ---------------------------------------------------------------------------
@@ -380,47 +330,40 @@ def codec_sniff_audit(
     O(batch bytes), never per-sample Python.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def codec_sniff_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
             raw_col = pdf["bytes"].to_numpy()
             codec_col = pdf["codec"].to_numpy()
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
             cands = list(codecs.CODECS)
             rough = np.full((n, len(cands)), np.nan)
             rms2 = np.full((n, len(cands)), np.nan)
+            # every row decodes under every candidate: one group per candidate
             for ci, cand in enumerate(cands):
-                bps = codecs.bytes_per_sample(cand)
-                idx = np.flatnonzero((byte_lens > 0) & (byte_lens % bps == 0))
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                # junk byte patterns reinterpreted as f32 can hold SIGNALING
-                # NaNs; the widening cast quiets them and numpy warns — the
-                # NaN itself is handled (isfinite gate below), so silence it
-                with np.errstate(invalid="ignore"):
-                    x = codecs.decode(
-                        b"".join(raw_col[i] for i in idx), cand
-                    ).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
-                energy = np.add.reduceat(x * x, seg)
-                d2 = (x[1:] - x[:-1]) ** 2
-                d2 = np.append(d2, 0.0)
-                # zero the cross-clip boundary diffs BEFORE the reduceat:
-                # junk reinterpretations reach ~1e38, so a boundary d2 of
-                # ~1e76 absorbs the real clip sum in float64 and the
-                # subtract-after pattern (audio_features' zcr, safe there
-                # because flips are 0/1) returns exactly 0 here
-                d2[seg + lens - 1] = 0.0
-                diff_sum = np.add.reduceat(d2, seg)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    r = (diff_sum / np.maximum(lens - 1, 1)) / (energy / lens)
-                ok = (lens > 1) & (energy > 0) & np.isfinite(r)
-                rough[idx[ok], ci] = r[ok]
-                rms2[idx[ok], ci] = energy[ok] / lens[ok]
+                for idx, lens, seg, x in codecs.codec_groups(
+                    raw_col, np.full(n, cand, dtype=object)
+                ):
+                    # junk byte patterns reinterpreted as f32 can hold
+                    # SIGNALING NaNs; the widening cast quiets them and numpy
+                    # warns — the NaN itself is handled (isfinite gate
+                    # below), so silence it
+                    with np.errstate(invalid="ignore"):
+                        x = x.astype(np.float64)
+                    energy = np.add.reduceat(x * x, seg)
+                    d2 = (x[1:] - x[:-1]) ** 2
+                    d2 = np.append(d2, 0.0)
+                    # zero the cross-clip boundary diffs BEFORE the reduceat:
+                    # junk reinterpretations reach ~1e38, so a boundary d2 of
+                    # ~1e76 absorbs the real clip sum in float64 and the
+                    # subtract-after pattern (audio_features' zcr, safe there
+                    # because flips are 0/1) returns exactly 0 here
+                    d2[seg + lens - 1] = 0.0
+                    diff_sum = np.add.reduceat(d2, seg)
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        r = (diff_sum / np.maximum(lens - 1, 1)) / (energy / lens)
+                    ok = (lens > 1) & (energy > 0) & np.isfinite(r)
+                    rough[idx[ok], ci] = r[ok]
+                    rms2[idx[ok], ci] = energy[ok] / lens[ok]
             cand_index = {c: i for i, c in enumerate(cands)}
             decl_ci = np.array([cand_index.get(c, -1) for c in codec_col])
             rows = np.arange(n)
@@ -463,42 +406,4 @@ def codec_sniff_audit(
             )
 
     pruned = clips.select("clip_id", "part", "bytes", "codec")
-    return pruned.mapInPandas(batches, schema=CODEC_SNIFF_SCHEMA)
-
-
-def codec_sniff_violations(
-    clips: DataFrame,
-    ratio_threshold: float = _SNIFF_RATIO,
-    key_col: str = "clip_id",
-    part_col: str = "part",
-) -> DataFrame:
-    """Suite adapter for ``codec_sniff_audit``: violation rows for clips
-    whose payload content contradicts the declared codec. Severity 4.2:
-    corruption-class (every downstream consumer decodes garbage), just
-    below byte-length mismatches (4.5) which are the cheaper, more certain
-    signal. Undecodable clips are NOT re-reported (codec/payload checks
-    own that class).
-
-    Cost note: runs its own multi-candidate decode pass (~4x one decode of
-    the wave); enable for ingest audits of untrusted producers rather than
-    every run.
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = codec_sniff_audit(src, ratio_threshold=ratio_threshold)
-    bad = audit.where(F.col("suspect_codec"))
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("codec_sniff").alias("check"),
-        F.concat(
-            F.lit("declared="),
-            F.col("codec"),
-            F.lit(" roughness="),
-            F.round("roughness_declared", 3).cast("string"),
-            F.lit(" best_alt="),
-            F.coalesce(F.col("best_alt_codec"), F.lit("?")),
-            F.lit(" ratio="),
-            F.round("roughness_ratio", 2).cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(4.2).alias("severity"),
-    )
+    return pruned.mapInPandas(codec_sniff_kernel, schema=CODEC_SNIFF_SCHEMA)

@@ -97,7 +97,7 @@ def pace_max_ratio(
             out_r.append(best)
         return pd.DataFrame({group_col: out_k, "n": out_n, out_col: out_r})
 
-    def gen(batches):
+    def pace_max_ratio_kernel(batches):
         buf = None
         for pdf in batches:
             if buf is not None and len(buf):
@@ -118,7 +118,7 @@ def pace_max_ratio(
         .repartition(F.col(group_col))
         .sortWithinPartitions(group_col, order_col)
     )
-    return src.mapInPandas(gen, schema)
+    return src.mapInPandas(pace_max_ratio_kernel, schema)
 
 
 def active_duration(

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from . import VIOLATION_COLS
+from . import violation_rows
 
 
 @dataclass
@@ -156,73 +156,12 @@ def constraint_violations(df: DataFrame, spec: TableSchemaSpec) -> DataFrame:
         return df.sparkSession.createDataFrame([], schema="key string, check string, detail string, part int, severity double")
 
     fails = F.array_compact(F.array(*checks))
-    return (
-        df.select(
-            F.col(spec.key_col).alias("key"),
-            F.col(spec.part_col).cast("int").alias("part"),
-            F.explode(fails).alias("detail"),
-        )
-        .select(
-            "key",
-            F.lit("schema_constraint").alias("check"),
-            "detail",
-            "part",
-            F.lit(3.0).alias("severity"),
-        )
-        .select(*VIOLATION_COLS)
+    exploded = df.select(
+        F.col(spec.key_col).alias("key"),
+        F.col(spec.part_col).alias("part"),
+        F.explode(fails).alias("detail"),
     )
-
-
-def encoding_violations(
-    df: DataFrame,
-    text_col: str = "transcript",
-    key_col: str = "clip_id",
-    part_col: str = "part",
-) -> DataFrame:
-    """Encoding-hygiene violations for a text column, as VIOLATION_SCHEMA
-    rows: U+FFFD replacement characters (an upstream decoder already gave
-    up), C0 control characters / DEL, UTF-8-as-latin-1 mojibake signatures
-    ('Ã©', 'â€™'), and in-body U+FEFF BOMs (concatenated BOM-prefixed
-    files). This is the corruption class transcript byte-EQUALITY cannot
-    catch: mojibake introduced upstream of the reference split sits in BOTH
-    copies, so the equality invariant passes — content inspection is the
-    only detector (see functions/text.py encoding signals; reference
-    analogue: the reference's string-content screens, SURVEY.md §2.8).
-
-    Null transcripts are owned by the schema nullability constraint
-    (no-double-count rule, like byte_length/speaking_rate). Pure
-    whole-stage-codegen string expressions over one scan — no shuffle, no
-    Python; like byte_length, cheap enough to be default-ON at 10^12 rows.
-    Severity 3.5: content-quality class, above schema domain errors (3.0),
-    below corruption-class byte_length (4.5).
-    """
-    from ..functions import text as text_fn
-
-    t = F.col(text_col)
-    counted = df.where(t.isNotNull()).select(
-        F.col(key_col).alias("key"),
-        F.col(part_col).cast("int").alias("part"),
-        text_fn.repl_char_count(t).alias("_repl"),
-        text_fn.ctrl_char_count(t).alias("_ctrl"),
-        text_fn.mojibake_count(t).alias("_moji"),
-        text_fn.bom_char_count(t).alias("_bom"),
-    )
-    bad = counted.where(
-        (F.col("_repl") + F.col("_ctrl") + F.col("_moji") + F.col("_bom")) > 0
-    )
-    detail = F.concat(
-        F.lit("repl="), F.col("_repl").cast("string"),
-        F.lit(" ctrl="), F.col("_ctrl").cast("string"),
-        F.lit(" mojibake="), F.col("_moji").cast("string"),
-        F.lit(" bom="), F.col("_bom").cast("string"),
-    )
-    return bad.select(
-        "key",
-        F.lit("encoding").alias("check"),
-        detail.alias("detail"),
-        "part",
-        F.lit(3.5).alias("severity"),
-    ).select(*VIOLATION_COLS)
+    return violation_rows(exploded, "schema_constraint", F.col("detail"), 3.0, key="key")
 
 
 def json_key_profile(df: DataFrame, col: str) -> DataFrame:

@@ -462,7 +462,7 @@ def score_ensemble(features: DataFrame, model: EnsembleModel) -> DataFrame:
         out_fields.append(StructField(f"{m}_pred", IntegerType(), True))
     schema = StructType(out_fields)
 
-    def gen(batches):
+    def score_ensemble_kernel(batches):
         mdl = b.value
         for pdf in batches:
             X = pdf[mdl.feature_cols].to_numpy(dtype=np.float64)
@@ -472,7 +472,7 @@ def score_ensemble(features: DataFrame, model: EnsembleModel) -> DataFrame:
                 pdf[f"{name}_pred"] = (s < 0).astype(np.int32)
             yield pdf
 
-    return features.mapInPandas(gen, schema=schema)
+    return features.mapInPandas(score_ensemble_kernel, schema=schema)
 
 
 def anomaly_output(scored: DataFrame, min_votes: int = 2) -> DataFrame:
@@ -568,7 +568,7 @@ def ranked_anomalies(
         + [StructField("rank", LongType(), False)]
     )
 
-    def gen(batches):
+    def ranked_anomalies_kernel(batches):
         seen = 0
         off = None
         for pdf in batches:
@@ -583,7 +583,7 @@ def ranked_anomalies(
             seen += len(pdf)
             yield pdf
 
-    return s.mapInPandas(gen, schema=schema)
+    return s.mapInPandas(ranked_anomalies_kernel, schema=schema)
 
 
 def anomaly_attribution(
@@ -612,7 +612,7 @@ def anomaly_attribution(
         ]
     )
 
-    def gen(batches):
+    def attribution_kernel(batches):
         mdl = b.value
         cols = mdl.feature_cols
         for pdf in batches:
@@ -643,4 +643,4 @@ def anomaly_attribution(
                 }
             )
 
-    return features.mapInPandas(gen, schema=schema)
+    return features.mapInPandas(attribution_kernel, schema=schema)

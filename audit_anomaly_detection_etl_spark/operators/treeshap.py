@@ -221,7 +221,7 @@ def shap_attribution(
         ]
     )
 
-    def gen(batches):
+    def shap_kernel(batches):
         mdl = b.value
         cols = mdl.feature_cols
         for pdf in batches:
@@ -246,4 +246,4 @@ def shap_attribution(
                 }
             )
 
-    return src.mapInPandas(gen, schema=schema)
+    return src.mapInPandas(shap_kernel, schema=schema)

@@ -38,19 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators import (
-    VIOLATION_COLS,
-    column_stats,
-    drift,
-    media,
-    payload,
-    referential,
-    schema_check,
-    uniqueness,
-)
+from ..operators import VIOLATION_COLS, column_stats, drift, schema_check
 from ..sources import tableio
 from .. import __version__
 from .checkpoint import CheckpointStore, PartitionVerdict, plan_resume
+from .checks import CHECKS, NON_ROW_LEVEL_CHECKS, wave_violations  # noqa: F401
 from .spec import SuiteSpec
 
 
@@ -76,192 +68,27 @@ class KilledMidRun(RuntimeError):
     """Raised by the fault injector in tests (kill/resume scenario)."""
 
 
-# checks that need table-wide or cross-batch state: excluded when composing
-# ROW-LEVEL violations for an arbitrary slice of the table (a streaming
-# micro-batch); the batch suite owns them (uniqueness/referential per wave
-# or globally, drift against the full-table histogram), and the streaming
-# stateful monitors cover their cross-batch analogues
-NON_ROW_LEVEL_CHECKS = ("uniqueness", "referential", "drift")
-
-
-def wave_violations(
-    wave_df: DataFrame, ref_df: DataFrame | None, spec: SuiteSpec, checks: tuple
-) -> DataFrame | None:
-    """Compose every requested check's violation rows over one slice of the
-    clips table into a single lazy plan (ONE scan per slice). Shared by the
-    batch suite's per-wave path and the streaming ingest path
-    (streaming/incremental.py), so batch and ingest-time validation agree
-    check-for-check on the row-level set."""
-    parts = []
-    if "schema" in checks:
-        parts.append(schema_check.constraint_violations(wave_df, spec.schema_spec))
-    if "uniqueness" in checks:
-        parts.append(
-            uniqueness.uniqueness_violations(
-                wave_df,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-                n_salts=spec.uniqueness_salts,
-            )
-        )
-    if "referential" in checks and ref_df is not None:
-        parts.append(
-            referential.referential_violations(
-                wave_df, ref_df, key_col=spec.schema_spec.key_col, part_col=spec.schema_spec.part_col
-            )
-        )
-    if "payload" in checks and ref_df is not None:
-        src = wave_df
-        if spec.payload_sample is not None:
-            # deterministic key-hash sample for the decode-dominated pass
-            # (spec.payload_sample doc): independent of the table's crc32
-            # partition layout, stable across runs for a fixed salt, and
-            # pushed below the join so the ref side prunes with it
-            frac, salt = spec.payload_sample
-            src = wave_df.where(
-                F.pmod(
-                    F.xxhash64(
-                        F.concat(
-                            F.col(spec.schema_spec.key_col).cast("string"),
-                            F.lit(str(salt)),
-                        )
-                    ),
-                    F.lit(1_000_000),
-                )
-                < F.lit(int(round(frac * 1_000_000)))
-            )
-        parts.append(payload.payload_violations(payload.payload_report(src, ref_df)))
-    if "speaking_rate" in checks:
-        lo, hi = spec.speaking_rate_bounds
-        parts.append(
-            media.speaking_rate_violations(
-                wave_df,
-                min_wps=lo,
-                max_wps=hi,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if "byte_length" in checks:
-        parts.append(
-            payload.byte_length_violations(
-                wave_df,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-                # schema's allowed-codec domain constraint owns declared-codec
-                # validity; suppress the duplicate report only when that
-                # constraint actually EXISTS in the active spec AND the schema
-                # check runs (a spec whose codec column has no allowed-list
-                # would otherwise let unknown codecs pass the suite silently)
-                report_unknown_codec=not (
-                    "schema" in checks
-                    and any(
-                        c.name == "codec" and c.allowed
-                        for c in spec.schema_spec.columns
-                    )
-                ),
-            )
-        )
-    if "encoding" in checks:
-        parts.append(
-            schema_check.encoding_violations(
-                wave_df,
-                text_col=spec.encoding_text_col,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if "loudness" in checks:
-        target, tol = spec.loudness_bounds
-        parts.append(
-            media.loudness_violations(
-                wave_df,
-                target_dbfs=target,
-                tolerance_db=tol,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if "dropout" in checks:
-        parts.append(
-            media.dropout_violations(
-                wave_df,
-                min_run_ms=spec.dropout_min_run_ms,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if "codec_sniff" in checks:
-        parts.append(
-            payload.codec_sniff_violations(
-                wave_df,
-                ratio_threshold=spec.codec_sniff_ratio,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if "tonal" in checks:
-        parts.append(
-            media.tonal_violations(
-                wave_df,
-                flatness_threshold=spec.tonal_flatness_threshold,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if "stutter" in checks:
-        frame_ms, min_repeats = spec.stutter_params
-        parts.append(
-            media.stutter_violations(
-                wave_df,
-                frame_ms=frame_ms,
-                min_repeats=min_repeats,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+# the checks a table whose partition column is not a key function cannot
+# decide per wave (uniqueness, referential)
+_KEY_CHECKS = tuple(c for c in CHECKS if c.build is not None and not c.row_level)
 
 
 def _global_key_checks(
     spark: SparkSession, clips_root: str, ref_root: str | None, spec: SuiteSpec
 ) -> DataFrame | None:
-    """key_partitioned=False path: uniqueness + referential over the FULL
-    table, every invocation. Cross-partition duplicates / orphans cannot be
+    """key_partitioned=False path: the ``_KEY_CHECKS`` over the FULL table,
+    every invocation. Cross-partition duplicates / orphans cannot be
     decomposed per-wave when the partition column is not a key function, so
-    these two checks are excluded from the resumable per-wave plan and
+    these checks are excluded from the resumable per-wave plan and
     recomputed here — scanning only (key, part) columns, which is cheap
     relative to payload decode (the scan prunes to two columns)."""
-    parts = []
-    full = tableio.read_table(spark, clips_root)
-    if "uniqueness" in spec.checks:
-        parts.append(
-            uniqueness.uniqueness_violations(
-                full,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-                n_salts=spec.uniqueness_salts,
-            )
-        )
-    if "referential" in spec.checks and ref_root:
-        ref_full = tableio.read_table(spark, ref_root)
-        parts.append(
-            referential.referential_violations(
-                full, ref_full, key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
-    if not parts:
+    entries = [c for c in _KEY_CHECKS if c.name in spec.checks]
+    if not entries:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    full = tableio.read_table(spark, clips_root)
+    need_ref = ref_root and any(c.needs_ref for c in entries)
+    ref_full = tableio.read_table(spark, ref_root) if need_ref else None
+    return wave_violations(full, ref_full, spec, tuple(c.name for c in entries))
 
 
 def _cap_sink(viols: DataFrame, cap: int | None) -> DataFrame:
@@ -354,11 +181,8 @@ def run_suite(
         else:
             ref_df = tableio.read_table(spark, ref_root)
 
-        wave_checks = (
-            spec.checks
-            if spec.key_partitioned
-            else tuple(c for c in spec.checks if c not in ("uniqueness", "referential"))
-        )
+        key_names = () if spec.key_partitioned else [c.name for c in _KEY_CHECKS]
+        wave_checks = tuple(c for c in spec.checks if c not in key_names)
         viols = wave_violations(wave_df, ref_df, spec, wave_checks)
         # clear this wave's previous violation partitions FIRST: dynamic
         # overwrite only replaces partitions PRESENT in the new write, so a

@@ -16,6 +16,7 @@ from .. import __version__
 from ..functions import codecs
 from ..operators.drift import BinSpec
 from ..operators.schema_check import ColumnSpec, TableSchemaSpec
+from .checks import ALL_CHECKS, DEFAULT_CHECKS
 
 
 def default_clips_schema_spec() -> TableSchemaSpec:
@@ -45,50 +46,42 @@ class SuiteSpec:
         ]
     )
     psi_threshold: float = 0.25
-    # byte_length is default-ON: a pure-codegen projection over three
-    # metadata columns + binary length that catches truncation/mis-codec
-    # BEFORE the decode pass — at 10^12 clips the cheapest check in the
-    # suite (operators/payload.py:byte_length_violations, plan-audited
-    # zero-exchange)
-    # encoding is default-ON for the same reason: pure-codegen string
-    # signals (U+FFFD / control chars / mojibake / in-body BOM) over the
-    # transcript column — the corruption class transcript byte-EQUALITY
-    # cannot catch, because upstream mojibake sits in BOTH copies
-    # (operators/schema_check.py:encoding_violations)
-    checks: tuple = (
-        "schema", "stats", "uniqueness", "referential", "drift", "payload",
-        "byte_length", "encoding",
-    )
+    # the default-ON entries of the check table (plans/checks.py). Among
+    # them byte_length and encoding are pure-codegen projections (payload
+    # byte length vs declared metadata; transcript encoding signals) — at
+    # 10^12 clips the cheapest checks in the suite, catching truncation and
+    # mojibake BEFORE the decode pass
+    checks: tuple = DEFAULT_CHECKS
     # which string column the encoding check inspects; must exist in
     # schema_spec.columns when the check is enabled (run_suite fails fast)
     encoding_text_col: str = "transcript"
     # transcript<->audio plausibility bounds (words/sec); the check itself is
-    # opt-in via checks=(..., "speaking_rate") — see media.speaking_rate_violations
+    # opt-in via checks=(..., "speaking_rate") — see plans/checks.py
     speaking_rate_bounds: tuple = (0.3, 6.0)
     # loudness-normalization feasibility (target dBFS, ok-tolerance dB);
-    # opt-in via checks=(..., "loudness") — see media.loudness_violations.
+    # opt-in via checks=(..., "loudness") — see media.loudness_audit.
     # NOTE: runs its own decode pass; pair with a suite that skips payload
     # or accept the second decode of the wave.
     loudness_bounds: tuple = (-20.0, 1.0)
     # interior-dropout detection (mid-clip digital-silence runs >= this many
     # ms — buffer underruns / network dropouts); opt-in via
-    # checks=(..., "dropout") — see media.dropout_violations. Same cost note
+    # checks=(..., "dropout") — see media.dropout_audit. Same cost note
     # as loudness: its own decode pass.
     dropout_min_run_ms: float = 30.0
     # mislabeled-codec sniff (declared-law decode noise-like while an
     # alternative decodes to plausible audio; catches ulaw<->alaw swaps
     # byte_length cannot see); opt-in via checks=(..., "codec_sniff") —
-    # see payload.codec_sniff_violations. Costs ~4x one decode pass:
+    # see payload.codec_sniff_audit. Costs ~4x one decode pass:
     # ingest-audit tier, not every run.
     codec_sniff_ratio: float = 3.0
     # synthetic narrowband-tone detection (Hann-windowed spectral flatness
     # under this threshold => machine-generated tone, not recorded audio);
-    # opt-in via checks=(..., "tonal") — see media.tonal_violations. Own
+    # opt-in via checks=(..., "tonal") — see media.tonal_audit. Own
     # decode pass (FFT bounded at 8192 samples/clip): ingest-audit tier.
     tonal_flatness_threshold: float = 2e-3
     # stuck-buffer detection (>= min_repeats bit-identical non-silent
     # frames of frame_ms each); opt-in via checks=(..., "stutter") — see
-    # media.stutter_violations. Own decode pass, same cost note as dropout.
+    # media.stutter_audit. Own decode pass, same cost note as dropout.
     stutter_params: tuple = (20.0, 3)
     # payload-check COST tier: the reference-comparison pass (decode + SNR
     # + transcript equality — the one check whose cost is dominated by
@@ -161,12 +154,6 @@ _SPEC_KEYS = {
     "payload_sample",
 }
 
-# every check name the runner understands — the default SuiteSpec.checks
-# tuple is the default-ON subset, not the universe (speaking_rate and
-# loudness stay opt-in: each costs a decode or joins against one)
-ALL_CHECKS = SuiteSpec().checks + (
-    "speaking_rate", "loudness", "dropout", "codec_sniff", "tonal", "stutter",
-)
 _SCHEMA_KEYS = {"columns", "key_col", "part_col"}
 _COLUMN_KEYS = {"name", "dtype", "nullable", "allowed", "min_value", "max_value"}
 _DRIFT_KEYS = {"col", "lo", "hi", "n_bins"}

@@ -3639,7 +3639,7 @@ def q131(spark, sf_dir):
 )
 def q132(spark, sf_dir):
     """Encoding-hygiene audit (functions/text.py encoding signals,
-    operators/schema_check.py:encoding_violations — SURVEY.md §2.8 string
+    the "encoding" entry of plans/checks.py — SURVEY.md §2.8 string
     screens): per-language totals of U+FFFD replacement chars, C0
     control chars/DEL, UTF-8-as-latin-1 mojibake signatures and in-body
     BOMs. This corruption class defeats byte-equality checks (upstream

@@ -29,6 +29,14 @@ def _nodes(p: str, op: str) -> int:
     return len(re.findall(r"\(\d+\) " + op + r"\b", p))
 
 
+def mapinpandas_kernels(p: str) -> list[str]:
+    """Python function name of every MapInPandas node, in plan order (the
+    node's Arguments line starts with the kernel's call)."""
+    import re
+
+    return re.findall(r"\(\d+\) MapInPandas\n.*\nArguments: (\w+)\(", p)
+
+
 def unpartitioned_windows(p: str) -> int:
     """Count Window NODES with an EMPTY partition spec — the Arguments line
     of a partitioned Window prints ``[exprs], [partitionSpec], [orderSpec]``
@@ -627,16 +635,19 @@ def bucketed_payload_plans(spark) -> dict[str, str]:
         from audit_anomaly_detection_etl_spark.plans.runner import (
             wave_violations,
         )
-        from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
+        from audit_anomaly_detection_etl_spark.plans.spec import ALL_CHECKS, SuiteSpec
 
         spec = SuiteSpec()
         wave_b = plan_of(wave_violations(cb, rb, spec, spec.checks))
         wave_p = plan_of(wave_violations(clips, ref, spec, spec.checks))
+        every = SuiteSpec(checks=ALL_CHECKS)
+        wave_all = plan_of(wave_violations(clips, ref, every, every.checks))
         return {
             "bucketed": bucketed,
             "parquet": parquet,
             "wave_bucketed": wave_b,
             "wave_parquet": wave_p,
+            "wave_all_checks": wave_all,
         }
     finally:
         if old is None:
@@ -675,6 +686,13 @@ EXTRA_RULES = [
         "control: the same wave plan over plain parquet shuffles many times "
         "(proves the wave_bucketed rule is non-vacuous)",
         lambda p: _nodes(p, "Exchange") >= 6,
+    ),
+    (
+        "wave_all_checks",
+        "wave plan with EVERY check in ALL_CHECKS over plain parquet: exactly "
+        "one MapInPandas per decode check (payload, loudness, dropout, "
+        "codec_sniff, tonal, stutter = 6 Python passes) and no BatchEvalPython",
+        lambda p: _nodes(p, "MapInPandas") == 6 and "BatchEvalPython" not in p,
     ),
 ]
 

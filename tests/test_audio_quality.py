@@ -7,7 +7,7 @@ import numpy as np
 
 from audit_anomaly_detection_etl_spark.functions import codecs
 from audit_anomaly_detection_etl_spark.operators import media
-from audit_anomaly_detection_etl_spark.plans.runner import run_suite
+from audit_anomaly_detection_etl_spark.plans.runner import run_suite, wave_violations
 from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
 
@@ -68,7 +68,8 @@ def test_speaking_rate_unit(spark):
     df = spark.createDataFrame(
         rows, "clip_id string, part int, transcript string, dur_ms int"
     )
-    got = {r["key"]: r.asDict() for r in media.speaking_rate_violations(df).collect()}
+    v = wave_violations(df, None, SuiteSpec(), ("speaking_rate",))
+    got = {r["key"]: r.asDict() for r in v.collect()}
     assert set(got) == {"slow", "fast"}
     assert all(v["check"] == "speaking_rate" and v["severity"] == 2.5 for v in got.values())
     assert "wps=500" in got["fast"]["detail"]

@@ -133,7 +133,10 @@ def test_sniff_violations_adapter_and_suite(spark, clip_dir, tmp_path):
         ("lied", 0, codecs.encode(tone, "alaw"), "ulaw"),
         ("honest", 0, codecs.encode(tone, "ulaw"), "ulaw"),
     ]
-    v = payload.codec_sniff_violations(_rows_df(spark, rows)).toPandas()
+    from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
+
+    v = wave_violations(_rows_df(spark, rows), None, SuiteSpec(), ("codec_sniff",)).toPandas()
     assert list(v["key"]) == ["lied"]
     assert set(v["check"]) == {"codec_sniff"}
     assert float(v["severity"].iloc[0]) == 4.2
@@ -144,7 +147,6 @@ def test_sniff_violations_adapter_and_suite(spark, clip_dir, tmp_path):
     import os
 
     from audit_anomaly_detection_etl_spark.plans.runner import run_suite
-    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
     spec = SuiteSpec(checks=("codec_sniff",), codec_sniff_ratio=1e9)
     res = run_suite(

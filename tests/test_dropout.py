@@ -10,6 +10,8 @@ import pytest
 
 from audit_anomaly_detection_etl_spark.functions import codecs
 from audit_anomaly_detection_etl_spark.operators import media
+from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 from audit_anomaly_detection_etl_spark.sources import synth
 
 SR = 8000
@@ -212,7 +214,7 @@ def test_dropout_violations_adapter(spark):
         _clip("c_bad", _tone(100), codec="opus"),  # undecodable: NOT re-reported
     ]
     df = spark.createDataFrame(pd.DataFrame(rows))
-    v = media.dropout_violations(df).toPandas()
+    v = wave_violations(df, None, SuiteSpec(), ("dropout",)).toPandas()
     assert list(v["key"]) == ["c_hit"]
     assert set(v["check"]) == {"dropout"}
     assert float(v["severity"].iloc[0]) == 3.5
@@ -225,7 +227,6 @@ def test_dropout_in_suite(spark, clip_dir, tmp_path):
     import os
 
     from audit_anomaly_detection_etl_spark.plans.runner import run_suite
-    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
     spec = SuiteSpec(checks=("dropout",), dropout_min_run_ms=1e9)
     res = run_suite(

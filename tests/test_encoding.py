@@ -15,8 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from audit_anomaly_detection_etl_spark.functions import text as T
-from audit_anomaly_detection_etl_spark.operators import schema_check as SC
-from audit_anomaly_detection_etl_spark.plans.runner import run_suite
+from audit_anomaly_detection_etl_spark.plans.runner import run_suite, wave_violations
 from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
 
@@ -60,7 +59,7 @@ def test_encoding_violations_rows(spark):
         ],
         "clip_id string, transcript string, part int",
     )
-    v = SC.encoding_violations(df).collect()
+    v = wave_violations(df, None, SuiteSpec(), ("encoding",)).collect()
     by_key = {r["key"]: r for r in v}
     assert set(by_key) == {"k2", "k4"}
     assert by_key["k2"]["check"] == "encoding"
@@ -179,6 +178,7 @@ def test_encoding_plan_is_scan_only(spark):
     df = spark.createDataFrame(
         [("k", "t", 0)], "clip_id string, transcript string, part int"
     )
-    plan = SC.encoding_violations(df)._jdf.queryExecution().executedPlan().toString()
+    v = wave_violations(df, None, SuiteSpec(), ("encoding",))
+    plan = v._jdf.queryExecution().executedPlan().toString()
     for banned in ("Exchange", "Join", "BatchEvalPython", "ArrowEvalPython"):
         assert banned not in plan, plan

@@ -159,6 +159,51 @@ def test_oversized_dimensions_refused_before_allocation():
         decode_jpeg(encode_jpeg(px), max_pixels=16)
 
 
+def _rgb_coded(ids: bytes, adobe_transform: int | None) -> bytes:
+    """A JPEG whose stored planes are R, G, B = (120, 100, 160): the encoder
+    writes YCbCr(px), so px is the YCbCr->RGB image of those plane values.
+    ``ids`` relabels the SOF/SOS component ids; ``adobe_transform`` adds an
+    Adobe APP14 segment with that transform flag."""
+    px = np.empty((16, 16, 3), dtype=np.uint8)
+    px[:, :] = (165, 107, 70)
+    raw = bytearray(encode_jpeg(px, quality=95))
+    sof, sos = raw.find(b"\xff\xc0"), raw.rfind(b"\xff\xda")
+    for k, cid in enumerate(ids):
+        raw[sof + 10 + 3 * k] = cid
+        raw[sos + 5 + 2 * k] = cid
+    if adobe_transform is not None:
+        app14 = b"Adobe" + struct.pack(">HHHB", 100, 0, 0, adobe_transform)
+        raw[2:2] = b"\xff\xee" + struct.pack(">H", 2 + len(app14)) + app14
+    return bytes(raw)
+
+
+@pytest.mark.parametrize(
+    "ids,adobe_transform,match",
+    [
+        (b"RGB", None, "YCbCr ids"),
+        (b"RGB", 0, "YCbCr ids"),
+        (b"\x01\x02\x03", 0, "transform=0"),
+    ],
+    ids=["rgb_ids", "rgb_ids_and_adobe", "adobe_transform_0"],
+)
+def test_rgb_coded_frames_refused(ids, adobe_transform, match):
+    # decoding these through the YCbCr transform returned (165, 107, 70)
+    # pixels for a (120, 100, 160) image, with decode_ok=True
+    with pytest.raises(JpegError, match=match):
+        decode_jpeg(_rgb_coded(ids, adobe_transform))
+
+
+def test_ycbcr_frames_still_decode():
+    # APP14 transform=1 declares YCbCr; a grayscale frame with transform=0
+    # has no colour transform to get wrong
+    out = decode_jpeg(_rgb_coded(b"\x01\x02\x03", 1))
+    assert np.abs(out.astype(int) - (165, 107, 70)).max() <= 2
+    gray = bytearray(encode_jpeg(_smooth(8, 8, 1, seed=3)))
+    app14 = b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 0)
+    gray[2:2] = b"\xff\xee" + struct.pack(">H", 2 + len(app14)) + app14
+    assert decode_jpeg(bytes(gray)).shape == (8, 8, 1)
+
+
 def test_fuzz_mutations_never_crash():
     """Any single byte flip / truncation must produce either a JpegError
     or a valid-shaped uint8 array — never a non-JpegError exception.

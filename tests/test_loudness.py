@@ -8,7 +8,18 @@ import pytest
 
 from audit_anomaly_detection_etl_spark.functions import codecs
 from audit_anomaly_detection_etl_spark.operators import media
+from audit_anomaly_detection_etl_spark.operators.schema_check import TableSchemaSpec
+from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 from audit_anomaly_detection_etl_spark.sources import synth
+
+
+def _loudness_rows(df, key_col="clip_id", part_col="part"):
+    """The loudness check's violation rows through the suite's check table,
+    under a spec naming ``key_col``/``part_col`` as the table's key/part."""
+    spec = SuiteSpec(schema_spec=TableSchemaSpec([], key_col=key_col, part_col=part_col))
+    return wave_violations(df, None, spec, ("loudness",))
+
 
 FS = 1.0  # decoded PCM is normalized float in [-1, 1)
 TARGET = -20.0
@@ -165,7 +176,7 @@ def test_custom_key_with_bystander_clip_id(spark):
             }
         )
     )
-    out = media.loudness_violations(df, key_col="utt_id").collect()
+    out = _loudness_rows(df, key_col="utt_id").collect()
     assert [r["key"] for r in out] == ["u1"]  # quiet clip -> boost_clips
     with pytest.raises(ValueError, match="no_such"):
-        media.loudness_violations(df, key_col="no_such")
+        _loudness_rows(df, key_col="no_such")

@@ -90,6 +90,35 @@ def test_zero_timescale_refused():
         parse_mp4(bytes(raw))
 
 
+def _empty_tkhd_at_eof() -> bytes:
+    """A video trak whose tkhd is an empty 8-byte box AFTER its mdia, in a
+    moov that is the file's last box: the tkhd body starts exactly at EOF."""
+    mvhd = _box(b"mvhd", struct.pack(">B3xIIII", 0, 0, 0, 1000, 1000) + bytes(80))
+    hdlr = _box(b"hdlr", bytes(8) + b"vide" + bytes(13))
+    trak = _box(b"trak", _box(b"mdia", hdlr) + _box(b"tkhd", b""))
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0) + b"isomiso2")
+    raw = ftyp + _box(b"moov", mvhd + trak)
+    assert raw.endswith(b"\x00\x00\x00\x08tkhd")
+    return raw
+
+
+def test_empty_tkhd_at_eof_refused():
+    # reading the tkhd version byte past EOF raised IndexError, which
+    # video_metadata does not catch: one payload failed the whole task
+    with pytest.raises(Mp4Error, match="short tkhd"):
+        parse_mp4(_empty_tkhd_at_eof())
+
+
+def test_empty_tkhd_at_eof_degrades_in_spark(spark):
+    from audit_anomaly_detection_etl_spark.operators.media import video_metadata
+
+    df = spark.createDataFrame(
+        [("v", bytearray(_empty_tkhd_at_eof()))], "video_id string, bytes binary"
+    )
+    (row,) = video_metadata(df).collect()
+    assert not row["container_ok"] and row["parse_error"] == "short tkhd"
+
+
 def test_fuzz_mutations_never_crash():
     base = build_minimal_mp4(duration_ms=1234.0)
     rng = np.random.default_rng(7)

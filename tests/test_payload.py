@@ -264,13 +264,16 @@ def test_byte_length_fractional_truncation_not_ok(spark):
 def test_byte_length_custom_key_and_part_cols(spark):
     import pandas as pd
 
-    from audit_anomaly_detection_etl_spark.operators import payload as P
+    from audit_anomaly_detection_etl_spark.operators.schema_check import TableSchemaSpec
+    from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
     rows = [("u1", 3, b"\x00\x00", "pcm_s16le", 8000, 99999)]
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["utt_id", "pt", "bytes", "codec", "sr_hz", "dur_ms"])
     )
-    v = P.byte_length_violations(df, key_col="utt_id", part_col="pt").collect()
+    spec = SuiteSpec(schema_spec=TableSchemaSpec([], key_col="utt_id", part_col="pt"))
+    v = wave_violations(df, None, spec, ("byte_length",)).collect()
     assert len(v) == 1 and v[0]["key"] == "u1" and v[0]["part"] == 3
 
 

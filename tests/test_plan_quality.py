@@ -7,7 +7,13 @@ import sys
 
 import pytest
 
-from scripts.audit_plans import EXTRA_RULES, RULES, bucketed_payload_plans, plan_of
+from scripts.audit_plans import (
+    EXTRA_RULES,
+    RULES,
+    bucketed_payload_plans,
+    mapinpandas_kernels,
+    plan_of,
+)
 
 import __spark_entry__ as entry_mod
 
@@ -41,3 +47,18 @@ def bucketed_plans(spark):
 def test_bucketed_payload_join_rule(bucketed_plans, key, rule, pred):
     plan = bucketed_plans[key]
     assert pred(plan), f"payload_bucketed[{key}]: {rule}\n--- plan ---\n{plan[:4000]}"
+
+
+def test_wave_plan_kernels_are_named_per_check(bucketed_plans):
+    """Every Python pass of the all-checks wave plan carries its own kernel
+    name, so a plan's (and Spark's per-operator metrics') MapInPandas nodes
+    map back to the check that runs them."""
+    names = mapinpandas_kernels(bucketed_plans["wave_all_checks"])
+    assert sorted(names) == [
+        "audio_features_kernel",  # loudness
+        "codec_sniff_kernel",
+        "dropout_kernel",
+        "payload_kernel",
+        "stutter_kernel",
+        "tonal_kernel",
+    ], names

@@ -10,7 +10,7 @@ modules (scoring / media / drift) — each test pins one previously-wrong edge:
 - frame_sample_plan must not emit phantom frames for NULL/zero durations,
 - histogram() must not emit a bin=NULL group for NaN values,
 - categorical_drift must give a defined verdict at dof=0 (one category),
-- loudness_violations must accept a non-default key_col.
+- the loudness check must accept a non-default key_col.
 """
 
 import numpy as np
@@ -168,9 +168,12 @@ def test_loudness_violations_custom_key_col(spark):
             }
         )
     )
-    rows = media.loudness_violations(
-        df, key_col="utt_id", part_col="pt"
-    ).collect()
+    from audit_anomaly_detection_etl_spark.operators.schema_check import TableSchemaSpec
+    from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
+
+    spec = SuiteSpec(schema_spec=TableSchemaSpec([], key_col="utt_id", part_col="pt"))
+    rows = wave_violations(df, None, spec, ("loudness",)).collect()
     assert rows and rows[0]["key"] == "u1" and rows[0]["part"] == 3
 
 

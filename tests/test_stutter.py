@@ -10,6 +10,8 @@ import pytest
 
 from audit_anomaly_detection_etl_spark.functions import codecs
 from audit_anomaly_detection_etl_spark.operators import media
+from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 from audit_anomaly_detection_etl_spark.sources import synth
 
 SR = 8000
@@ -183,7 +185,7 @@ def test_stutter_violations_adapter(spark):
         _clip("c_bad", base, codec="opus"),  # NOT re-reported
     ]
     df = spark.createDataFrame(pd.DataFrame(rows))
-    v = media.stutter_violations(df).toPandas()
+    v = wave_violations(df, None, SuiteSpec(), ("stutter",)).toPandas()
     assert list(v["key"]) == ["c_hit"]
     assert set(v["check"]) == {"stutter"}
     assert float(v["severity"].iloc[0]) == 3.5
@@ -197,7 +199,6 @@ def test_stutter_in_suite(spark, clip_dir, tmp_path):
     import os
 
     from audit_anomaly_detection_etl_spark.plans.runner import run_suite
-    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
     spec = SuiteSpec(checks=("stutter",), stutter_params=(20.0, 10**6))
     res = run_suite(

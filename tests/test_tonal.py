@@ -10,6 +10,8 @@ import pytest
 
 from audit_anomaly_detection_etl_spark.functions import codecs
 from audit_anomaly_detection_etl_spark.operators import media
+from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 from audit_anomaly_detection_etl_spark.sources import synth
 
 SR = 8000
@@ -150,7 +152,7 @@ def test_tonal_violations_adapter(spark):
         _clip("c_bad", _sine(800, 440.0), codec="opus"),  # NOT re-reported
     ]
     df = spark.createDataFrame(pd.DataFrame(rows))
-    v = media.tonal_violations(df).toPandas()
+    v = wave_violations(df, None, SuiteSpec(), ("tonal",)).toPandas()
     assert list(v["key"]) == ["c_tone"]
     assert set(v["check"]) == {"tonal"}
     assert float(v["severity"].iloc[0]) == 2.5
@@ -164,7 +166,6 @@ def test_tonal_in_suite(spark, clip_dir, tmp_path):
     import os
 
     from audit_anomaly_detection_etl_spark.plans.runner import run_suite
-    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
     spec = SuiteSpec(checks=("tonal",), tonal_flatness_threshold=0.0)
     res = run_suite(
@@ -187,7 +188,6 @@ def test_tonal_flows_through_stream_ingest(spark, tmp_path):
     tonal+stutter checks enabled)."""
     import os
 
-    from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
     from audit_anomaly_detection_etl_spark.streaming import incremental
 
     t = synth.generate_clips(n_clips=300, n_parts=4, seed=19, tone_rate=0.02)
