@@ -46,6 +46,46 @@ def violation_rows(df, check: str, detail, severity: float, key: str = "clip_id"
     )
 
 
+def flagged_violations(df, flags):
+    """VIOLATION_SCHEMA rows from per-row flags in ONE projection: ``flags``
+    lists ``(check, predicate, detail, severity)``; each row of ``df`` yields
+    one violation per predicate that holds (a null predicate never does),
+    via ``explode(array_compact(array(when(pred, struct(...)), ...)))``."""
+    from pyspark.sql import functions as F
+
+    hits = F.array_compact(
+        F.array(
+            *[
+                F.when(
+                    pred,
+                    F.struct(
+                        F.lit(check).alias("c"),
+                        F.lit(float(severity)).alias("s"),
+                        detail.alias("d"),
+                    ),
+                )
+                for check, pred, detail, severity in flags
+            ]
+        )
+    )
+    return df.select(F.col("clip_id").alias("key"), "part", F.explode(hits).alias("v")).select(
+        "key",
+        F.col("v.c").alias("check"),
+        F.col("v.d").alias("detail"),
+        F.col("part").cast("int").alias("part"),
+        F.col("v.s").alias("severity"),
+    )
+
+
+def keyed_frame(pdf, metrics: dict, *passthrough: str):
+    """One mapInPandas output batch: the batch's ``clip_id``/``part`` (and
+    any ``passthrough`` input columns) beside a kernel's metric columns."""
+    import pandas as pd
+
+    cols = {c: pdf[c].to_numpy() for c in ("clip_id", "part", *passthrough)}
+    return pd.DataFrame({**cols, **metrics})
+
+
 def remap_key_part(df, key_col: str, part_col: str):
     """Map a spec's custom key/part columns onto the ``clip_id``/``part``
     names the media/payload internals hardcode — via a single ``select``,

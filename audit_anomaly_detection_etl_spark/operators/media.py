@@ -37,11 +37,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codecs
+from . import keyed_frame
 
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_samples long, "
-    "rms double, peak double, zcr double, est_dur_ms double"
+AUDIO_FEATURE_METRICS = (
+    "decode_ok boolean, n_samples long, rms double, peak double, zcr double, "
+    "est_dur_ms double"
 )
+
+AUDIO_FEATURES_SCHEMA = "clip_id string, part int, " + AUDIO_FEATURE_METRICS
 
 AUDIO_FEATURES_EXT_SCHEMA = AUDIO_FEATURES_SCHEMA + (
     ", dc_offset double, clip_ratio double, silence_ratio double"
@@ -51,6 +54,69 @@ AUDIO_FEATURES_EXT_SCHEMA = AUDIO_FEATURES_SCHEMA + (
 # positive rail is 32767/32768; anything at |x| >= this is a clipped sample
 _CLIP_THRESHOLD = 32767.0 / 32768.0
 _SILENCE_THRESHOLD = 1e-3  # ~-60 dBFS
+
+
+def audio_feature_metrics(pdf: pd.DataFrame, extended: bool = False) -> dict:
+    """The audio-features kernel over one Arrow batch (AUDIO_FEATURE_METRICS
+    columns, plus dc_offset/clip_ratio/silence_ratio when ``extended``); see
+    ``audio_features``. Float64 math."""
+    n = len(pdf)
+    raw_col = pdf["bytes"].to_numpy()
+    codec_col = pdf["codec"].to_numpy()
+    sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
+    decode_ok = np.zeros(n, dtype=bool)
+    n_samples = np.zeros(n, dtype=np.int64)
+    rms = np.full(n, np.nan)
+    peak = np.full(n, np.nan)
+    zcr = np.full(n, np.nan)
+    dc = np.full(n, np.nan)
+    clip_ratio = np.full(n, np.nan)
+    sil_ratio = np.full(n, np.nan)
+
+    for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
+        pcm = pcm.astype(np.float64)
+        decode_ok[idx] = True
+        n_samples[idx] = lens
+        energy = np.add.reduceat(pcm**2, seg)
+        rms[idx] = np.sqrt(energy / lens)
+        peak[idx] = np.maximum.reduceat(np.abs(pcm), seg)
+        # sign changes between consecutive samples; the boundary pair
+        # between two concatenated clips must not count -> subtract a
+        # per-clip correction computed from the boundary values
+        flips = (np.signbit(pcm[1:]) != np.signbit(pcm[:-1])).astype(np.float64)
+        # pad so reduceat segments align with per-clip [start, end)
+        flips = np.append(flips, 0.0)
+        flip_counts = np.add.reduceat(flips, seg)
+        # last flip slot of each clip pairs it with the NEXT clip: drop it
+        ends = seg + lens - 1
+        flip_counts -= flips[ends]
+        zcr[idx] = np.where(lens > 1, flip_counts / (lens - 1), 0.0)
+        if extended:
+            a = np.abs(pcm)
+            dc[idx] = np.add.reduceat(pcm, seg) / lens
+            clip_ratio[idx] = (
+                np.add.reduceat((a >= _CLIP_THRESHOLD).astype(np.float64), seg)
+                / lens
+            )
+            sil_ratio[idx] = (
+                np.add.reduceat((a < _SILENCE_THRESHOLD).astype(np.float64), seg)
+                / lens
+            )
+
+    est_dur = np.where(
+        decode_ok & (sr_col > 0), n_samples / np.maximum(sr_col, 1) * 1000.0, np.nan
+    )
+    out = {
+        "decode_ok": decode_ok,
+        "n_samples": n_samples,
+        "rms": rms,
+        "peak": peak,
+        "zcr": zcr,
+        "est_dur_ms": est_dur,
+    }
+    if extended:
+        out.update(dc_offset=dc, clip_ratio=clip_ratio, silence_ratio=sil_ratio)
+    return out
 
 
 def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
@@ -67,67 +133,7 @@ def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
 
     def audio_features_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            decode_ok = np.zeros(n, dtype=bool)
-            n_samples = np.zeros(n, dtype=np.int64)
-            rms = np.full(n, np.nan)
-            peak = np.full(n, np.nan)
-            zcr = np.full(n, np.nan)
-            dc = np.full(n, np.nan)
-            clip_ratio = np.full(n, np.nan)
-            sil_ratio = np.full(n, np.nan)
-
-            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
-                pcm = pcm.astype(np.float64)
-                decode_ok[idx] = True
-                n_samples[idx] = lens
-                energy = np.add.reduceat(pcm**2, seg)
-                rms[idx] = np.sqrt(energy / lens)
-                peak[idx] = np.maximum.reduceat(np.abs(pcm), seg)
-                # sign changes between consecutive samples; the boundary pair
-                # between two concatenated clips must not count -> subtract a
-                # per-clip correction computed from the boundary values
-                flips = (np.signbit(pcm[1:]) != np.signbit(pcm[:-1])).astype(np.float64)
-                # pad so reduceat segments align with per-clip [start, end)
-                flips = np.append(flips, 0.0)
-                flip_counts = np.add.reduceat(flips, seg)
-                # last flip slot of each clip pairs it with the NEXT clip: drop it
-                ends = seg + lens - 1
-                flip_counts -= flips[ends]
-                zcr[idx] = np.where(lens > 1, flip_counts / (lens - 1), 0.0)
-                if extended:
-                    a = np.abs(pcm)
-                    dc[idx] = np.add.reduceat(pcm, seg) / lens
-                    clip_ratio[idx] = (
-                        np.add.reduceat((a >= _CLIP_THRESHOLD).astype(np.float64), seg)
-                        / lens
-                    )
-                    sil_ratio[idx] = (
-                        np.add.reduceat((a < _SILENCE_THRESHOLD).astype(np.float64), seg)
-                        / lens
-                    )
-
-            est_dur = np.where(
-                decode_ok & (sr_col > 0), n_samples / np.maximum(sr_col, 1) * 1000.0, np.nan
-            )
-            out = {
-                "clip_id": pdf["clip_id"].to_numpy(),
-                "part": pdf["part"].to_numpy(),
-                "decode_ok": decode_ok,
-                "n_samples": n_samples,
-                "rms": rms,
-                "peak": peak,
-                "zcr": zcr,
-                "est_dur_ms": est_dur,
-            }
-            if extended:
-                out.update(
-                    dc_offset=dc, clip_ratio=clip_ratio, silence_ratio=sil_ratio
-                )
-            yield pd.DataFrame(out)
+            yield keyed_frame(pdf, audio_feature_metrics(pdf, extended))
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
     schema = AUDIO_FEATURES_EXT_SCHEMA if extended else AUDIO_FEATURES_SCHEMA
@@ -813,16 +819,19 @@ def loudness_audit(
     - ``undecodable`` decode failed or the clip is digital silence (rms=0,
       dBFS undefined)
     """
-    rms_db = F.lit(20.0) * F.log10(F.col("rms") / F.lit(_FULL_SCALE))
-    peak_db = F.lit(20.0) * F.log10(F.col("peak") / F.lit(_FULL_SCALE))
+    cols = loudness_cols(F.col, target_dbfs, tolerance_db)
+    return features.select("clip_id", "part", *[c.alias(k) for k, c in cols.items()])
+
+
+def loudness_cols(m, target_dbfs: float, tolerance_db: float) -> dict:
+    """``loudness_audit``'s output columns as Catalyst expressions over the
+    audio-features columns, ``m(name)`` resolving each input column."""
+    rms, peak = m("rms"), m("peak")
+    rms_db = F.lit(20.0) * F.log10(rms / F.lit(_FULL_SCALE))
+    peak_db = F.lit(20.0) * F.log10(peak / F.lit(_FULL_SCALE))
     gain = F.lit(target_dbfs) - rms_db
     headroom = -peak_db
-    bad = (
-        ~F.col("decode_ok")
-        | F.col("rms").isNull()
-        | F.isnan("rms")
-        | (F.col("rms") <= 0)
-    )
+    bad = ~m("decode_ok") | rms.isNull() | F.isnan(rms) | (rms <= 0)
     verdict = (
         F.when(bad, F.lit("undecodable"))
         .when(F.abs(gain) <= tolerance_db, F.lit("ok"))
@@ -831,15 +840,13 @@ def loudness_audit(
         .otherwise(F.lit("attenuate"))
     )
     null_if_bad = lambda c: F.when(~bad, c)  # noqa: E731
-    return features.select(
-        "clip_id",
-        "part",
-        F.round(null_if_bad(rms_db), 6).alias("rms_dbfs"),
-        F.round(null_if_bad(peak_db), 6).alias("peak_dbfs"),
-        F.round(null_if_bad(gain), 6).alias("gain_db"),
-        F.round(null_if_bad(headroom), 6).alias("headroom_db"),
-        verdict.alias("verdict"),
-    )
+    return {
+        "rms_dbfs": F.round(null_if_bad(rms_db), 6),
+        "peak_dbfs": F.round(null_if_bad(peak_db), 6),
+        "gain_db": F.round(null_if_bad(gain), 6),
+        "headroom_db": F.round(null_if_bad(headroom), 6),
+        "verdict": verdict,
+    }
 
 
 TRANSCODE_QA_SCHEMA = (
@@ -996,10 +1003,11 @@ def bandwidth_audit(
 # interior dropouts (mid-clip digital-silence runs)
 # ---------------------------------------------------------------------------
 
-DROPOUT_AUDIT_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_dropouts int, "
-    "max_dropout_ms double, dropout_ms_total double"
+DROPOUT_METRICS = (
+    "decode_ok boolean, n_dropouts int, max_dropout_ms double, dropout_ms_total double"
 )
+
+DROPOUT_AUDIT_SCHEMA = "clip_id string, part int, " + DROPOUT_METRICS
 
 # Digital-silence gate for dropout runs: above A-law's zero-code output
 # (decode(encode(0)) = 1/4096 ~ 2.44e-4 -- A-law has no true zero code) and
@@ -1008,6 +1016,66 @@ DROPOUT_AUDIT_SCHEMA = (
 # through ANY of the four codecs lands under this gate; quiet speech does
 # not.
 _DROPOUT_ZERO_EPS = 4e-4
+
+
+def dropout_metrics(
+    pdf: pd.DataFrame, min_run_ms: float = 30.0, zero_eps: float = _DROPOUT_ZERO_EPS
+) -> dict:
+    """The dropout check's kernel over one Arrow batch (DROPOUT_METRICS
+    columns); see ``dropout_audit``. Float32 math."""
+    n = len(pdf)
+    raw_col = pdf["bytes"].to_numpy()
+    codec_col = pdf["codec"].to_numpy()
+    sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
+    decode_ok = np.zeros(n, dtype=bool)
+    n_drop = np.zeros(n, dtype=np.int32)
+    max_ms = np.zeros(n, dtype=np.float64)
+    tot_ms = np.zeros(n, dtype=np.float64)
+    for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
+        decode_ok[idx] = True
+        last = seg + lens - 1
+        # NaN payloads (pcm_f32le corruption) compare False and so
+        # terminate silence runs -- they are the payload check's job
+        m = np.abs(pcm) <= zero_eps
+        if not m.any():
+            continue
+        prev = np.empty_like(m)
+        prev[0] = False
+        prev[1:] = m[:-1]
+        prev[seg] = False  # a clip start always opens a fresh run
+        starts = np.flatnonzero(m & ~prev)
+        nxt = np.empty_like(m)
+        nxt[-1] = False
+        nxt[:-1] = m[1:]
+        nxt[last] = False  # a clip end always closes its run
+        ends = np.flatnonzero(m & ~nxt)
+        clip_of = np.searchsorted(seg, starts, side="right") - 1
+        srv = sr_col[idx].astype(np.float64)
+        run_ms = (
+            (ends - starts + 1).astype(np.float64)
+            / np.maximum(srv[clip_of], 1.0)
+            * 1000.0
+        )
+        # interior = strictly inside the clip; sr<=0 clips are the
+        # schema check's problem, not reportable in milliseconds
+        sel = (
+            (starts > seg[clip_of])
+            & (ends < last[clip_of])
+            & (run_ms >= min_run_ms)
+            & (srv[clip_of] > 0)
+        )
+        if not sel.any():
+            continue
+        tgt = idx[clip_of[sel]]
+        np.add.at(n_drop, tgt, 1)
+        np.add.at(tot_ms, tgt, run_ms[sel])
+        np.maximum.at(max_ms, tgt, run_ms[sel])
+    return {
+        "decode_ok": decode_ok,
+        "n_dropouts": n_drop,
+        "max_dropout_ms": np.where(decode_ok, max_ms, np.nan),
+        "dropout_ms_total": np.where(decode_ok, tot_ms, np.nan),
+    }
 
 
 def dropout_audit(
@@ -1041,63 +1109,7 @@ def dropout_audit(
 
     def dropout_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            decode_ok = np.zeros(n, dtype=bool)
-            n_drop = np.zeros(n, dtype=np.int32)
-            max_ms = np.zeros(n, dtype=np.float64)
-            tot_ms = np.zeros(n, dtype=np.float64)
-            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
-                decode_ok[idx] = True
-                last = seg + lens - 1
-                # NaN payloads (pcm_f32le corruption) compare False and so
-                # terminate silence runs -- they are the payload check's job
-                m = np.abs(pcm) <= zero_eps
-                if not m.any():
-                    continue
-                prev = np.empty_like(m)
-                prev[0] = False
-                prev[1:] = m[:-1]
-                prev[seg] = False  # a clip start always opens a fresh run
-                starts = np.flatnonzero(m & ~prev)
-                nxt = np.empty_like(m)
-                nxt[-1] = False
-                nxt[:-1] = m[1:]
-                nxt[last] = False  # a clip end always closes its run
-                ends = np.flatnonzero(m & ~nxt)
-                clip_of = np.searchsorted(seg, starts, side="right") - 1
-                srv = sr_col[idx].astype(np.float64)
-                run_ms = (
-                    (ends - starts + 1).astype(np.float64)
-                    / np.maximum(srv[clip_of], 1.0)
-                    * 1000.0
-                )
-                # interior = strictly inside the clip; sr<=0 clips are the
-                # schema check's problem, not reportable in milliseconds
-                sel = (
-                    (starts > seg[clip_of])
-                    & (ends < last[clip_of])
-                    & (run_ms >= min_run_ms)
-                    & (srv[clip_of] > 0)
-                )
-                if not sel.any():
-                    continue
-                tgt = idx[clip_of[sel]]
-                np.add.at(n_drop, tgt, 1)
-                np.add.at(tot_ms, tgt, run_ms[sel])
-                np.maximum.at(max_ms, tgt, run_ms[sel])
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "decode_ok": decode_ok,
-                    "n_dropouts": n_drop,
-                    "max_dropout_ms": np.where(decode_ok, max_ms, np.nan),
-                    "dropout_ms_total": np.where(decode_ok, tot_ms, np.nan),
-                }
-            )
+            yield keyed_frame(pdf, dropout_metrics(pdf, min_run_ms, zero_eps))
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
     return pruned.mapInPandas(dropout_kernel, schema=DROPOUT_AUDIT_SCHEMA)
@@ -1107,11 +1119,12 @@ def dropout_audit(
 # synthetic narrowband tones (test signals / IVR beeps / placeholder audio)
 # ---------------------------------------------------------------------------
 
-TONAL_AUDIT_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_used int, "
-    "spectral_flatness double, dominant_hz double, dominant_share double, "
-    "tonal boolean"
+TONAL_METRICS = (
+    "decode_ok boolean, n_used int, spectral_flatness double, dominant_hz double, "
+    "dominant_share double, tonal boolean"
 )
+
+TONAL_AUDIT_SCHEMA = "clip_id string, part int, " + TONAL_METRICS
 
 # Hann-windowed spectral flatness (geometric mean / arithmetic mean of the
 # non-DC power bins). Measured on this corpus's codecs: a digitally pure
@@ -1128,6 +1141,99 @@ _TONAL_MIN_SAMPLES = 256
 # (~32 MB per temporary; with the gather + window + complex output the
 # transient peak stays ~150 MB per task instead of scaling with batch size)
 _FFT_CHUNK_ELEMS = 4_000_000
+
+
+def tonal_metrics(
+    pdf: pd.DataFrame,
+    flatness_threshold: float = _TONAL_FLATNESS_THRESHOLD,
+    max_samples: int = 8192,
+    min_samples: int = _TONAL_MIN_SAMPLES,
+    fft_chunk_elems: int = _FFT_CHUNK_ELEMS,
+) -> dict:
+    """The tonal check's kernel over one Arrow batch (TONAL_METRICS
+    columns); see ``tonal_audit``. Float64 math."""
+    n = len(pdf)
+    raw_col = pdf["bytes"].to_numpy()
+    codec_col = pdf["codec"].to_numpy()
+    sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
+    decode_ok = np.zeros(n, dtype=bool)
+    n_used = np.zeros(n, dtype=np.int32)
+    flat = np.full(n, np.nan)
+    dom_hz = np.full(n, np.nan)
+    dom_share = np.full(n, np.nan)
+    for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
+        pcm = pcm.astype(np.float64)
+        decode_ok[idx] = True
+
+        def spectrum(P2, rows, m):
+            """Shared post-FFT math: P2 is (n_rows, nfft) power with
+            the DC bin already dropped; rows are global row indices;
+            m the analyzed sample count. The batched and per-clip
+            paths run the same per-row kernel, so which path a clip
+            took never changes its verdict."""
+            tot = P2.sum(axis=1)
+            ok = tot > 0.0
+            nb = P2.shape[1]
+            mean_p = tot / nb
+            with np.errstate(divide="ignore", invalid="ignore"):
+                # +mean*1e-12 floors exact-zero bins without moving
+                # the estimate (flatness floor 1e-12, far under
+                # threshold)
+                fl = (
+                    np.exp(np.log(P2 + mean_p[:, None] * 1e-12).mean(axis=1))
+                    / mean_p
+                )
+            b = np.argmax(P2, axis=1) + 1
+            sel = rows[ok]
+            flat[sel] = fl[ok]
+            srv = sr_col[sel].astype(np.float64)
+            dom_hz[sel] = np.where(srv > 0, b[ok] * srv / m, np.nan)
+            dom_share[sel] = P2[ok, b[ok] - 1] / tot[ok]
+
+        m_full = int(max_samples)
+        full = np.flatnonzero(lens >= m_full)
+        if full.size:
+            # every capped clip analyzes exactly max_samples: a
+            # batched 2-D rfft replaces the per-clip Python loop —
+            # at corpus-typical durations (>= ~1 s) this path
+            # carries nearly all clips. Rows are processed in
+            # chunks bounded at _FFT_CHUNK_ELEMS elements: an
+            # unchunked 10k-clip Arrow batch would materialize
+            # ~650 MB per temporary (offsets, gather, window,
+            # complex FFT output) and OOM executors the per-clip
+            # paths handle fine (scoring.py _CHUNK_ELEMS pattern)
+            n_used[idx[full]] = m_full
+            win = np.hanning(m_full)
+            rows_per = max(1, fft_chunk_elems // m_full)
+            for s0 in range(0, full.size, rows_per):
+                fc = full[s0 : s0 + rows_per]
+                offs = seg[fc][:, None] + np.arange(m_full)
+                X = pcm[offs]
+                rowfin = np.isfinite(X).all(axis=1)
+                if rowfin.any():
+                    Xf = X[rowfin] * win
+                    P2 = np.abs(np.fft.rfft(Xf, axis=1)[:, 1:]) ** 2
+                    spectrum(P2, idx[fc[rowfin]], m_full)
+        # variable-length tail: per-clip FFT (bounded by max_samples)
+        for j in np.flatnonzero(lens < m_full):
+            i = idx[j]
+            m = int(lens[j])
+            n_used[i] = m
+            if m < min_samples:
+                continue  # too short for a stable spectrum: NaN, never tonal
+            x = pcm[seg[j] : seg[j] + m]
+            if not np.isfinite(x).all():
+                continue  # NaN payloads are the payload check's defect
+            p1 = np.abs(np.fft.rfft(x * np.hanning(m))[1:]) ** 2
+            spectrum(p1[None, :], np.array([i]), m)
+    return {
+        "decode_ok": decode_ok,
+        "n_used": n_used,
+        "spectral_flatness": flat,
+        "dominant_hz": dom_hz,
+        "dominant_share": dom_share,
+        "tonal": np.where(np.isnan(flat), False, flat < flatness_threshold),
+    }
 
 
 def tonal_audit(
@@ -1161,8 +1267,8 @@ def tonal_audit(
     first ``max_samples`` decoded samples are analyzed, so cost is
     O(max_samples log max_samples) per clip regardless of duration — the
     loop iterates per clip (one vectorized rfft each), never per sample.
-    Cost tier: its own decode pass, like codec_sniff — opt-in ingest-audit
-    check, not an every-run default.
+    Opt-in suite check: in the suite, ``tonal_metrics`` runs inside the
+    wave's one decode pass (plans/checks.py) beside the other audio checks.
 
     Exact oracle: tests/test_tonal.py (planted pure tones vs sine+noise
     corpus clips, per-codec, plus the q136 synth-fixture parity test).
@@ -1170,92 +1276,10 @@ def tonal_audit(
 
     def tonal_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            decode_ok = np.zeros(n, dtype=bool)
-            n_used = np.zeros(n, dtype=np.int32)
-            flat = np.full(n, np.nan)
-            dom_hz = np.full(n, np.nan)
-            dom_share = np.full(n, np.nan)
-            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
-                pcm = pcm.astype(np.float64)
-                decode_ok[idx] = True
-
-                def spectrum(P2, rows, m):
-                    """Shared post-FFT math: P2 is (n_rows, nfft) power with
-                    the DC bin already dropped; rows are global row indices;
-                    m the analyzed sample count. The batched and per-clip
-                    paths run the same per-row kernel, so which path a clip
-                    took never changes its verdict."""
-                    tot = P2.sum(axis=1)
-                    ok = tot > 0.0
-                    nb = P2.shape[1]
-                    mean_p = tot / nb
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        # +mean*1e-12 floors exact-zero bins without moving
-                        # the estimate (flatness floor 1e-12, far under
-                        # threshold)
-                        fl = (
-                            np.exp(np.log(P2 + mean_p[:, None] * 1e-12).mean(axis=1))
-                            / mean_p
-                        )
-                    b = np.argmax(P2, axis=1) + 1
-                    sel = rows[ok]
-                    flat[sel] = fl[ok]
-                    srv = sr_col[sel].astype(np.float64)
-                    dom_hz[sel] = np.where(srv > 0, b[ok] * srv / m, np.nan)
-                    dom_share[sel] = P2[ok, b[ok] - 1] / tot[ok]
-
-                m_full = int(max_samples)
-                full = np.flatnonzero(lens >= m_full)
-                if full.size:
-                    # every capped clip analyzes exactly max_samples: a
-                    # batched 2-D rfft replaces the per-clip Python loop —
-                    # at corpus-typical durations (>= ~1 s) this path
-                    # carries nearly all clips. Rows are processed in
-                    # chunks bounded at _FFT_CHUNK_ELEMS elements: an
-                    # unchunked 10k-clip Arrow batch would materialize
-                    # ~650 MB per temporary (offsets, gather, window,
-                    # complex FFT output) and OOM executors the per-clip
-                    # paths handle fine (scoring.py _CHUNK_ELEMS pattern)
-                    n_used[idx[full]] = m_full
-                    win = np.hanning(m_full)
-                    rows_per = max(1, fft_chunk_elems // m_full)
-                    for s0 in range(0, full.size, rows_per):
-                        fc = full[s0 : s0 + rows_per]
-                        offs = seg[fc][:, None] + np.arange(m_full)
-                        X = pcm[offs]
-                        rowfin = np.isfinite(X).all(axis=1)
-                        if rowfin.any():
-                            Xf = X[rowfin] * win
-                            P2 = np.abs(np.fft.rfft(Xf, axis=1)[:, 1:]) ** 2
-                            spectrum(P2, idx[fc[rowfin]], m_full)
-                # variable-length tail: per-clip FFT (bounded by max_samples)
-                for j in np.flatnonzero(lens < m_full):
-                    i = idx[j]
-                    m = int(lens[j])
-                    n_used[i] = m
-                    if m < min_samples:
-                        continue  # too short for a stable spectrum: NaN, never tonal
-                    x = pcm[seg[j] : seg[j] + m]
-                    if not np.isfinite(x).all():
-                        continue  # NaN payloads are the payload check's defect
-                    p1 = np.abs(np.fft.rfft(x * np.hanning(m))[1:]) ** 2
-                    spectrum(p1[None, :], np.array([i]), m)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "decode_ok": decode_ok,
-                    "n_used": n_used,
-                    "spectral_flatness": flat,
-                    "dominant_hz": dom_hz,
-                    "dominant_share": dom_share,
-                    "tonal": np.where(np.isnan(flat), False, flat < flatness_threshold),
-                }
+            m = tonal_metrics(
+                pdf, flatness_threshold, max_samples, min_samples, fft_chunk_elems
             )
+            yield keyed_frame(pdf, m)
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
     return pruned.mapInPandas(tonal_kernel, schema=TONAL_AUDIT_SCHEMA)
@@ -1265,10 +1289,68 @@ def tonal_audit(
 # stutter: stuck-buffer / looped-frame repeats (non-silent dropout analogue)
 # ---------------------------------------------------------------------------
 
-STUTTER_AUDIT_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_stutters int, "
-    "max_repeat_frames int, stutter_ms_total double"
+STUTTER_METRICS = (
+    "decode_ok boolean, n_stutters int, max_repeat_frames int, stutter_ms_total double"
 )
+
+STUTTER_AUDIT_SCHEMA = "clip_id string, part int, " + STUTTER_METRICS
+
+
+def stutter_metrics(
+    pdf: pd.DataFrame,
+    frame_ms: float = 20.0,
+    min_repeats: int = 3,
+    zero_eps: float = _DROPOUT_ZERO_EPS,
+) -> dict:
+    """The stutter check's kernel over one Arrow batch (STUTTER_METRICS
+    columns); see ``stutter_audit``. Float32 math."""
+    n = len(pdf)
+    raw_col = pdf["bytes"].to_numpy()
+    codec_col = pdf["codec"].to_numpy()
+    sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
+    decode_ok = np.zeros(n, dtype=bool)
+    n_runs = np.zeros(n, dtype=np.int32)
+    max_rep = np.zeros(n, dtype=np.int32)
+    tot_ms = np.zeros(n, dtype=np.float64)
+    for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
+        decode_ok[idx] = True
+        for j in range(idx.size):
+            i = idx[j]
+            sr = int(sr_col[i])
+            if sr <= 0:
+                continue  # schema's defect; ms math undefined
+            flen = max(1, int(round(sr * frame_ms / 1000.0)))
+            k = int(lens[j] // flen)
+            if k < min_repeats:
+                continue
+            fr = pcm[seg[j] : seg[j] + k * flen].reshape(k, flen)
+            # identical-to-previous, and not digital silence
+            eq = (fr[1:] == fr[:-1]).all(axis=1) & (
+                np.abs(fr[1:]).max(axis=1) > zero_eps
+            )
+            if not eq.any():
+                continue
+            # run-length over the eq booleans: a run of L Trues is
+            # L+1 identical frames
+            e = np.empty(eq.size + 2, dtype=bool)
+            e[0] = e[-1] = False
+            e[1:-1] = eq
+            d = np.diff(e.astype(np.int8))
+            starts = np.flatnonzero(d == 1)
+            ends = np.flatnonzero(d == -1)
+            reps = (ends - starts) + 1  # frames per run
+            sel = reps >= min_repeats
+            if not sel.any():
+                continue
+            n_runs[i] = int(sel.sum())
+            max_rep[i] = int(reps[sel].max())
+            tot_ms[i] = float(reps[sel].sum()) * flen / sr * 1000.0
+    return {
+        "decode_ok": decode_ok,
+        "n_stutters": n_runs,
+        "max_repeat_frames": max_rep,
+        "stutter_ms_total": np.where(decode_ok, tot_ms, np.nan),
+    }
 
 
 def stutter_audit(
@@ -1306,57 +1388,7 @@ def stutter_audit(
 
     def stutter_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            decode_ok = np.zeros(n, dtype=bool)
-            n_runs = np.zeros(n, dtype=np.int32)
-            max_rep = np.zeros(n, dtype=np.int32)
-            tot_ms = np.zeros(n, dtype=np.float64)
-            for idx, lens, seg, pcm in codecs.codec_groups(raw_col, codec_col):
-                decode_ok[idx] = True
-                for j in range(idx.size):
-                    i = idx[j]
-                    sr = int(sr_col[i])
-                    if sr <= 0:
-                        continue  # schema's defect; ms math undefined
-                    flen = max(1, int(round(sr * frame_ms / 1000.0)))
-                    k = int(lens[j] // flen)
-                    if k < min_repeats:
-                        continue
-                    fr = pcm[seg[j] : seg[j] + k * flen].reshape(k, flen)
-                    # identical-to-previous, and not digital silence
-                    eq = (fr[1:] == fr[:-1]).all(axis=1) & (
-                        np.abs(fr[1:]).max(axis=1) > zero_eps
-                    )
-                    if not eq.any():
-                        continue
-                    # run-length over the eq booleans: a run of L Trues is
-                    # L+1 identical frames
-                    e = np.empty(eq.size + 2, dtype=bool)
-                    e[0] = e[-1] = False
-                    e[1:-1] = eq
-                    d = np.diff(e.astype(np.int8))
-                    starts = np.flatnonzero(d == 1)
-                    ends = np.flatnonzero(d == -1)
-                    reps = (ends - starts) + 1  # frames per run
-                    sel = reps >= min_repeats
-                    if not sel.any():
-                        continue
-                    n_runs[i] = int(sel.sum())
-                    max_rep[i] = int(reps[sel].max())
-                    tot_ms[i] = float(reps[sel].sum()) * flen / sr * 1000.0
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "decode_ok": decode_ok,
-                    "n_stutters": n_runs,
-                    "max_repeat_frames": max_rep,
-                    "stutter_ms_total": np.where(decode_ok, tot_ms, np.nan),
-                }
-            )
+            yield keyed_frame(pdf, stutter_metrics(pdf, frame_ms, min_repeats, zero_eps))
 
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
     return pruned.mapInPandas(stutter_kernel, schema=STUTTER_AUDIT_SCHEMA)

@@ -39,122 +39,126 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codecs
-from . import VIOLATION_COLS
+from . import flagged_violations, keyed_frame
 
 SNR_THRESHOLD_DB = 30.0
 
-REPORT_SCHEMA = (
-    "clip_id string, part int, codec string, decode_ok boolean, snr_db double, "
-    "dur_ok boolean, transcript_ok boolean, transcript_null boolean, has_ref boolean"
+# the columns payload_metrics returns per batch (the per-clip report flags)
+PAYLOAD_METRICS = (
+    "decode_ok boolean, snr_db double, dur_ok boolean, transcript_ok boolean, "
+    "transcript_null boolean, has_ref boolean"
 )
+
+REPORT_SCHEMA = "clip_id string, part int, codec string, " + PAYLOAD_METRICS
+
+
+def payload_metrics(pdf: pd.DataFrame) -> dict:
+    """The payload check's kernel over one Arrow batch of ref-joined clips
+    (PAYLOAD_METRICS columns). Whole-batch vectorized — the Python
+    interpreter never loops over samples, and the per-clip math (decode,
+    noise/signal energy) runs as ONE numpy op per codec group over the
+    concatenation of all clips in the batch, with per-clip reductions via
+    ``np.add.reduceat`` over the segment offsets. The only O(n_rows) Python
+    left is byte-length probing of the object-typed binary columns
+    (unavoidable for Arrow binary arrays in pandas; cost is one ``len()``
+    per clip, not per sample).
+    """
+    n = len(pdf)
+    raw_col = pdf["bytes"].to_numpy()
+    ref_col = pdf["pcm_ref"].to_numpy()
+    # NULL metadata arrives as NaN floats; a straight int64 cast turns
+    # NaN into INT64_MIN garbage. Null sr/dur is the schema/byte_length
+    # checks' defect (no-double-count) — mask it out of the dur check.
+    meta_ok = (
+        ~(pd.isna(pdf["sr_hz"]) | pd.isna(pdf["dur_ms"]))
+    ).to_numpy(dtype=bool)
+    sr_col = pdf["sr_hz"].fillna(0).to_numpy(dtype=np.int64)
+    dur_col = pdf["dur_ms"].fillna(0).to_numpy(dtype=np.int64)
+    tr_vals = pdf["transcript"].to_numpy()
+    trr_vals = pdf["transcript_ref"].to_numpy()
+
+    decode_ok = np.zeros(n, dtype=bool)
+    snr = np.full(n, np.nan)
+    dur_ok = np.zeros(n, dtype=bool)
+    has_ref = np.array([r is not None for r in ref_col], dtype=bool)
+    transcript_null = pd.isna(pdf["transcript"]).to_numpy()
+
+    ref_lens = np.array([len(r) if r is not None else -1 for r in ref_col], dtype=np.int64)
+    codec_col = pdf["codec"].to_numpy()
+
+    # an EMPTY payload decodes (to zero samples) here; unknown-codec and
+    # torn payloads keep decode_ok False
+    for idx, lens, starts, pcm_all in codecs.codec_groups(
+        raw_col, codec_col, allow_empty=True
+    ):
+        decode_ok[idx] = True
+        sr = sr_col[idx]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            dur_ok[idx] = np.where(
+                meta_ok[idx],
+                (sr > 0)
+                & (dur_col[idx] == np.round(lens / np.maximum(sr, 1) * 1000.0)),
+                True,  # null metadata: not this check's defect
+            )
+
+        # SNR vs reference: rows with a ref row; float32 ref => 4 B/sample
+        m = has_ref[idx]
+        if not m.any():
+            continue
+        ref_ok = (ref_lens[idx] % 4 == 0) & (ref_lens[idx] // 4 == lens) & (lens > 0)
+        snr[idx[m & ~ref_ok]] = float("-inf")  # length mismatch / torn ref
+        g = np.flatnonzero(m & ref_ok)
+        if g.size == 0:
+            continue
+        rows = idx[g]
+        # float32 element math + float64 ACCUMULATION (reduceat dtype):
+        # the decoded PCM is float32, so diffs/squares are computed at
+        # source precision (a bit-exact pair still subtracts to exactly
+        # 0.0) while the per-clip energy sums accumulate in float64 —
+        # same inf/-inf semantics, ~1e-5 dB on finite SNR, and half the
+        # allocation traffic of promoting both 700 MB sides to float64
+        # (the dominant cost with 32 workers contending for memory
+        # bandwidth; the numpy math itself is ~2.5 cpu-s per 24k clips)
+        ref_all = np.frombuffer(b"".join(ref_col[i] for i in rows), dtype=np.float32)
+        test_all = np.concatenate(
+            [pcm_all[starts[j] : starts[j] + lens[j]] for j in g]
+        )
+        seg = np.zeros(g.size, dtype=np.int64)
+        np.cumsum(lens[g][:-1], out=seg[1:])
+        d = ref_all - test_all
+        np.square(d, out=d)
+        noise = np.add.reduceat(d, seg, dtype=np.float64)
+        sig = np.add.reduceat(np.square(ref_all), seg, dtype=np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = 10.0 * np.log10(sig / noise)
+        # order matches codecs.snr_db: a bit-exact match is +inf even
+        # when both sides are all-zero (noise==0 wins over sig==0)
+        s[sig == 0.0] = float("-inf")  # silent reference can't attest
+        s[noise == 0.0] = float("inf")  # bit-exact
+        # any remaining NaN is corruption, not a verdict: inf/inf from
+        # float32 overflow (|x| > ~1.8e19 squares past f32 max) or NaN
+        # samples in either side. Spark orders NaN ABOVE every number,
+        # so a NaN snr_db would silently PASS the `< threshold` check —
+        # force it to a fail. (The pre-LUT float64 path could not
+        # overflow here but passed NaN samples the same silent way.)
+        s[np.isnan(s)] = float("-inf")
+        snr[rows] = s
+
+    # transcript byte-equality is independent of audio decode success
+    transcript_ok = ~transcript_null & has_ref & (tr_vals == trr_vals)
+    return {
+        "decode_ok": decode_ok,
+        "snr_db": snr,
+        "dur_ok": dur_ok,
+        "transcript_ok": transcript_ok,
+        "transcript_null": transcript_null,
+        "has_ref": has_ref,
+    }
 
 
 def payload_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Whole-batch vectorized validation — the Python interpreter never loops
-    over samples, and the per-clip math (decode, noise/signal energy) runs as
-    ONE numpy op per codec group over the concatenation of all clips in the
-    Arrow batch, with per-clip reductions via ``np.add.reduceat`` over the
-    segment offsets. The only O(n_rows) Python left is byte-length probing of
-    the object-typed binary columns (unavoidable for Arrow binary arrays in
-    pandas; cost is one ``len()`` per clip, not per sample).
-    """
     for pdf in batches:
-        n = len(pdf)
-        raw_col = pdf["bytes"].to_numpy()
-        ref_col = pdf["pcm_ref"].to_numpy()
-        # NULL metadata arrives as NaN floats; a straight int64 cast turns
-        # NaN into INT64_MIN garbage. Null sr/dur is the schema/byte_length
-        # checks' defect (no-double-count) — mask it out of the dur check.
-        meta_ok = (
-            ~(pd.isna(pdf["sr_hz"]) | pd.isna(pdf["dur_ms"]))
-        ).to_numpy(dtype=bool)
-        sr_col = pdf["sr_hz"].fillna(0).to_numpy(dtype=np.int64)
-        dur_col = pdf["dur_ms"].fillna(0).to_numpy(dtype=np.int64)
-        tr_vals = pdf["transcript"].to_numpy()
-        trr_vals = pdf["transcript_ref"].to_numpy()
-
-        decode_ok = np.zeros(n, dtype=bool)
-        snr = np.full(n, np.nan)
-        dur_ok = np.zeros(n, dtype=bool)
-        has_ref = np.array([r is not None for r in ref_col], dtype=bool)
-        transcript_null = pd.isna(pdf["transcript"]).to_numpy()
-
-        ref_lens = np.array([len(r) if r is not None else -1 for r in ref_col], dtype=np.int64)
-        codec_col = pdf["codec"].to_numpy()
-
-        # an EMPTY payload decodes (to zero samples) here; unknown-codec and
-        # torn payloads keep decode_ok False
-        for idx, lens, starts, pcm_all in codecs.codec_groups(
-            raw_col, codec_col, allow_empty=True
-        ):
-            decode_ok[idx] = True
-            sr = sr_col[idx]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                dur_ok[idx] = np.where(
-                    meta_ok[idx],
-                    (sr > 0)
-                    & (dur_col[idx] == np.round(lens / np.maximum(sr, 1) * 1000.0)),
-                    True,  # null metadata: not this check's defect
-                )
-
-            # SNR vs reference: rows with a ref row; float32 ref => 4 B/sample
-            m = has_ref[idx]
-            if not m.any():
-                continue
-            ref_ok = (ref_lens[idx] % 4 == 0) & (ref_lens[idx] // 4 == lens) & (lens > 0)
-            snr[idx[m & ~ref_ok]] = float("-inf")  # length mismatch / torn ref
-            g = np.flatnonzero(m & ref_ok)
-            if g.size == 0:
-                continue
-            rows = idx[g]
-            # float32 element math + float64 ACCUMULATION (reduceat dtype):
-            # the decoded PCM is float32, so diffs/squares are computed at
-            # source precision (a bit-exact pair still subtracts to exactly
-            # 0.0) while the per-clip energy sums accumulate in float64 —
-            # same inf/-inf semantics, ~1e-5 dB on finite SNR, and half the
-            # allocation traffic of promoting both 700 MB sides to float64
-            # (the dominant cost with 32 workers contending for memory
-            # bandwidth; the numpy math itself is ~2.5 cpu-s per 24k clips)
-            ref_all = np.frombuffer(b"".join(ref_col[i] for i in rows), dtype=np.float32)
-            test_all = np.concatenate(
-                [pcm_all[starts[j] : starts[j] + lens[j]] for j in g]
-            )
-            seg = np.zeros(g.size, dtype=np.int64)
-            np.cumsum(lens[g][:-1], out=seg[1:])
-            d = ref_all - test_all
-            np.square(d, out=d)
-            noise = np.add.reduceat(d, seg, dtype=np.float64)
-            sig = np.add.reduceat(np.square(ref_all), seg, dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = 10.0 * np.log10(sig / noise)
-            # order matches codecs.snr_db: a bit-exact match is +inf even
-            # when both sides are all-zero (noise==0 wins over sig==0)
-            s[sig == 0.0] = float("-inf")  # silent reference can't attest
-            s[noise == 0.0] = float("inf")  # bit-exact
-            # any remaining NaN is corruption, not a verdict: inf/inf from
-            # float32 overflow (|x| > ~1.8e19 squares past f32 max) or NaN
-            # samples in either side. Spark orders NaN ABOVE every number,
-            # so a NaN snr_db would silently PASS the `< threshold` check —
-            # force it to a fail. (The pre-LUT float64 path could not
-            # overflow here but passed NaN samples the same silent way.)
-            s[np.isnan(s)] = float("-inf")
-            snr[rows] = s
-
-        # transcript byte-equality is independent of audio decode success
-        transcript_ok = ~transcript_null & has_ref & (tr_vals == trr_vals)
-        yield pd.DataFrame(
-            {
-                "clip_id": pdf["clip_id"].to_numpy(),
-                "part": pdf["part"].to_numpy(),
-                "codec": codec_col,
-                "decode_ok": decode_ok,
-                "snr_db": snr,
-                "dur_ok": dur_ok,
-                "transcript_ok": transcript_ok,
-                "transcript_null": transcript_null,
-                "has_ref": has_ref,
-            }
-        )
+        yield keyed_frame(pdf, payload_metrics(pdf), "codec")
 
 
 def payload_report(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
@@ -177,36 +181,35 @@ def payload_report(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
     return joined.mapInPandas(payload_kernel, schema=REPORT_SCHEMA)
 
 
+def payload_flags(m=F.col) -> list:
+    """The payload check's ``(check, predicate, detail, severity)`` flags
+    over PAYLOAD_METRICS columns, ``m(name)`` resolving each column.
+    Severities rank the final output like the reference's (prediction,
+    score) sort (SURVEY.md O1)."""
+    ok, has_ref, t_null = m("decode_ok"), m("has_ref"), m("transcript_null")
+    snr = m("snr_db")
+    return [
+        ("codec", ~ok, F.lit("payload failed to decode"), 5.0),
+        (
+            "payload_snr",
+            ok & has_ref & (F.coalesce(snr, F.lit(-1e9)) < SNR_THRESHOLD_DB),
+            F.concat(F.lit("snr_db="), F.round(snr, 2).cast("string")),
+            4.0,
+        ),
+        ("dur_mismatch", ok & ~m("dur_ok"), F.lit("dur_ms != decoded length"), 2.5),
+        ("transcript_null", t_null, F.lit("null transcript"), 1.5),
+        (
+            "transcript_mismatch",
+            ~t_null & has_ref & ~m("transcript_ok"),
+            F.lit("transcript differs from reference"),
+            2.0,
+        ),
+    ]
+
+
 def payload_violations(report: DataFrame) -> DataFrame:
-    """VIOLATION_SCHEMA rows from the report flags. Severities rank the final
-    output like the reference's (prediction, score) sort (SURVEY.md O1).
-    """
-    checks = F.array_compact(
-        F.array(
-            F.when(~F.col("decode_ok"), F.struct(F.lit("codec").alias("c"), F.lit(5.0).alias("s"), F.lit("payload failed to decode").alias("d"))),
-            F.when(
-                F.col("decode_ok") & F.col("has_ref") & (F.coalesce(F.col("snr_db"), F.lit(-1e9)) < SNR_THRESHOLD_DB),
-                F.struct(F.lit("payload_snr").alias("c"), F.lit(4.0).alias("s"), F.concat(F.lit("snr_db="), F.round("snr_db", 2).cast("string")).alias("d")),
-            ),
-            F.when(F.col("decode_ok") & ~F.col("dur_ok"), F.struct(F.lit("dur_mismatch").alias("c"), F.lit(2.5).alias("s"), F.lit("dur_ms != decoded length").alias("d"))),
-            F.when(F.col("transcript_null"), F.struct(F.lit("transcript_null").alias("c"), F.lit(1.5).alias("s"), F.lit("null transcript").alias("d"))),
-            F.when(
-                ~F.col("transcript_null") & F.col("has_ref") & ~F.col("transcript_ok"),
-                F.struct(F.lit("transcript_mismatch").alias("c"), F.lit(2.0).alias("s"), F.lit("transcript differs from reference").alias("d")),
-            ),
-        )
-    )
-    return (
-        report.select("clip_id", "part", F.explode(checks).alias("v"))
-        .select(
-            F.col("clip_id").alias("key"),
-            F.col("v.c").alias("check"),
-            F.col("v.d").alias("detail"),
-            F.col("part"),
-            F.col("v.s").alias("severity"),
-        )
-        .select(*VIOLATION_COLS)
-    )
+    """VIOLATION_SCHEMA rows from the report flags."""
+    return flagged_violations(report, payload_flags())
 
 
 def byte_length_audit(
@@ -281,11 +284,12 @@ def byte_length_audit(
 # declared-codec plausibility sniff (mislabeled companding law)
 # ---------------------------------------------------------------------------
 
-CODEC_SNIFF_SCHEMA = (
-    "clip_id string, part int, codec string, decode_ok boolean, "
-    "roughness_declared double, best_alt_codec string, "
+CODEC_SNIFF_METRICS = (
+    "decode_ok boolean, roughness_declared double, best_alt_codec string, "
     "roughness_best_alt double, roughness_ratio double, suspect_codec boolean"
 )
+
+CODEC_SNIFF_SCHEMA = "clip_id string, part int, codec string, " + CODEC_SNIFF_METRICS
 
 # a wrong-law decode looks noise-like: white noise has first-difference
 # energy ~2x signal energy, correctly decoded band-limited audio sits far
@@ -296,6 +300,80 @@ CODEC_SNIFF_SCHEMA = (
 _SNIFF_MIN_ROUGHNESS = 0.5
 _SNIFF_RATIO = 3.0
 _SNIFF_MIN_RMS = 1e-4
+
+
+def codec_sniff_metrics(
+    pdf: pd.DataFrame,
+    ratio_threshold: float = _SNIFF_RATIO,
+    min_declared_roughness: float = _SNIFF_MIN_ROUGHNESS,
+) -> dict:
+    """The codec_sniff check's kernel over one Arrow batch
+    (CODEC_SNIFF_METRICS columns); see ``codec_sniff_audit``."""
+    n = len(pdf)
+    raw_col = pdf["bytes"].to_numpy()
+    codec_col = pdf["codec"].to_numpy()
+    cands = list(codecs.CODECS)
+    rough = np.full((n, len(cands)), np.nan)
+    rms2 = np.full((n, len(cands)), np.nan)
+    # every row decodes under every candidate: one group per candidate
+    for ci, cand in enumerate(cands):
+        for idx, lens, seg, x in codecs.codec_groups(
+            raw_col, np.full(n, cand, dtype=object)
+        ):
+            # junk byte patterns reinterpreted as f32 can hold
+            # SIGNALING NaNs; the widening cast quiets them and numpy
+            # warns — the NaN itself is handled (isfinite gate
+            # below), so silence it
+            with np.errstate(invalid="ignore"):
+                x = x.astype(np.float64)
+            energy = np.add.reduceat(x * x, seg)
+            d2 = (x[1:] - x[:-1]) ** 2
+            d2 = np.append(d2, 0.0)
+            # zero the cross-clip boundary diffs BEFORE the reduceat:
+            # junk reinterpretations reach ~1e38, so a boundary d2 of
+            # ~1e76 absorbs the real clip sum in float64 and the
+            # subtract-after pattern (audio_features' zcr, safe there
+            # because flips are 0/1) returns exactly 0 here
+            d2[seg + lens - 1] = 0.0
+            diff_sum = np.add.reduceat(d2, seg)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                r = (diff_sum / np.maximum(lens - 1, 1)) / (energy / lens)
+            ok = (lens > 1) & (energy > 0) & np.isfinite(r)
+            rough[idx[ok], ci] = r[ok]
+            rms2[idx[ok], ci] = energy[ok] / lens[ok]
+    cand_index = {c: i for i, c in enumerate(cands)}
+    decl_ci = np.array([cand_index.get(c, -1) for c in codec_col])
+    rows = np.arange(n)
+    has_decl = decl_ci >= 0
+    decl = np.full(n, np.nan)
+    decl_rms2 = np.full(n, np.nan)
+    decl[has_decl] = rough[rows[has_decl], decl_ci[has_decl]]
+    decl_rms2[has_decl] = rms2[rows[has_decl], decl_ci[has_decl]]
+    alt = rough.copy()
+    alt[rows[has_decl], decl_ci[has_decl]] = np.nan
+    alt_filled = np.where(np.isnan(alt), np.inf, alt)
+    best_ci = np.argmin(alt_filled, axis=1)
+    best_r = alt_filled[rows, best_ci]
+    best_ci = np.where(np.isfinite(best_r), best_ci, -1)
+    best_r = np.where(np.isfinite(best_r), best_r, np.nan)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ratio = decl / best_r
+    decode_ok = np.isfinite(decl)
+    suspect = (
+        decode_ok
+        & np.isfinite(ratio)
+        & (decl >= min_declared_roughness)
+        & (ratio >= ratio_threshold)
+        & (decl_rms2 >= _SNIFF_MIN_RMS**2)
+    )
+    return {
+        "decode_ok": decode_ok,
+        "roughness_declared": np.round(decl, 6),
+        "best_alt_codec": [cands[c] if c >= 0 else None for c in best_ci],
+        "roughness_best_alt": np.round(best_r, 6),
+        "roughness_ratio": np.round(ratio, 6),
+        "suspect_codec": suspect,
+    }
 
 
 def codec_sniff_audit(
@@ -332,78 +410,8 @@ def codec_sniff_audit(
 
     def codec_sniff_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            cands = list(codecs.CODECS)
-            rough = np.full((n, len(cands)), np.nan)
-            rms2 = np.full((n, len(cands)), np.nan)
-            # every row decodes under every candidate: one group per candidate
-            for ci, cand in enumerate(cands):
-                for idx, lens, seg, x in codecs.codec_groups(
-                    raw_col, np.full(n, cand, dtype=object)
-                ):
-                    # junk byte patterns reinterpreted as f32 can hold
-                    # SIGNALING NaNs; the widening cast quiets them and numpy
-                    # warns — the NaN itself is handled (isfinite gate
-                    # below), so silence it
-                    with np.errstate(invalid="ignore"):
-                        x = x.astype(np.float64)
-                    energy = np.add.reduceat(x * x, seg)
-                    d2 = (x[1:] - x[:-1]) ** 2
-                    d2 = np.append(d2, 0.0)
-                    # zero the cross-clip boundary diffs BEFORE the reduceat:
-                    # junk reinterpretations reach ~1e38, so a boundary d2 of
-                    # ~1e76 absorbs the real clip sum in float64 and the
-                    # subtract-after pattern (audio_features' zcr, safe there
-                    # because flips are 0/1) returns exactly 0 here
-                    d2[seg + lens - 1] = 0.0
-                    diff_sum = np.add.reduceat(d2, seg)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        r = (diff_sum / np.maximum(lens - 1, 1)) / (energy / lens)
-                    ok = (lens > 1) & (energy > 0) & np.isfinite(r)
-                    rough[idx[ok], ci] = r[ok]
-                    rms2[idx[ok], ci] = energy[ok] / lens[ok]
-            cand_index = {c: i for i, c in enumerate(cands)}
-            decl_ci = np.array([cand_index.get(c, -1) for c in codec_col])
-            rows = np.arange(n)
-            has_decl = decl_ci >= 0
-            decl = np.full(n, np.nan)
-            decl_rms2 = np.full(n, np.nan)
-            decl[has_decl] = rough[rows[has_decl], decl_ci[has_decl]]
-            decl_rms2[has_decl] = rms2[rows[has_decl], decl_ci[has_decl]]
-            alt = rough.copy()
-            alt[rows[has_decl], decl_ci[has_decl]] = np.nan
-            alt_filled = np.where(np.isnan(alt), np.inf, alt)
-            best_ci = np.argmin(alt_filled, axis=1)
-            best_r = alt_filled[rows, best_ci]
-            best_ci = np.where(np.isfinite(best_r), best_ci, -1)
-            best_r = np.where(np.isfinite(best_r), best_r, np.nan)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ratio = decl / best_r
-            decode_ok = np.isfinite(decl)
-            suspect = (
-                decode_ok
-                & np.isfinite(ratio)
-                & (decl >= min_declared_roughness)
-                & (ratio >= ratio_threshold)
-                & (decl_rms2 >= _SNIFF_MIN_RMS**2)
-            )
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "codec": codec_col,
-                    "decode_ok": decode_ok,
-                    "roughness_declared": np.round(decl, 6),
-                    "best_alt_codec": [
-                        cands[c] if c >= 0 else None for c in best_ci
-                    ],
-                    "roughness_best_alt": np.round(best_r, 6),
-                    "roughness_ratio": np.round(ratio, 6),
-                    "suspect_codec": suspect,
-                }
-            )
+            m = codec_sniff_metrics(pdf, ratio_threshold, min_declared_roughness)
+            yield keyed_frame(pdf, m, "codec")
 
     pruned = clips.select("clip_id", "part", "bytes", "codec")
     return pruned.mapInPandas(codec_sniff_kernel, schema=CODEC_SNIFF_SCHEMA)

@@ -2,11 +2,16 @@
 
 Each ``Check`` entry says whether the check is row-level (decidable on any
 slice of the table: a wave, a streaming micro-batch), whether it is on by
-default, and how it builds its violation rows from one slice. Everything
-else derives from ``CHECKS``: ``wave_violations`` (re-exported by
-``runner``) composes a slice from it, ``runner._global_key_checks`` runs its
-non-row-level builders over the whole table, and ``spec.py`` takes the
-default ``checks`` tuple and the spec-file name validation from it. Adding a check is one entry here plus
+default, and how it builds its violation rows from one slice: a Catalyst
+``build``, or, for the decode checks (payload and the audio opt-ins), a
+per-batch ``kernel`` plus the ``flags`` over its metrics. Every enabled
+decode check of a slice runs in ONE ``mapInPandas`` (``_decode_pass``), so
+the payload bytes cross the JVM->Python boundary once per wave however many
+audio checks are on. Everything else derives from ``CHECKS``:
+``wave_violations`` (re-exported by ``runner``) composes a slice from it,
+``runner._global_key_checks`` runs its non-row-level builders over the
+whole table, and ``spec.py`` takes the default ``checks`` tuple and the
+spec-file name validation from it. Adding a check is one entry here plus
 its parameter field on ``SuiteSpec``.
 
 Builders share a no-double-count rule: a defect another check owns (null
@@ -16,15 +21,19 @@ Severities rank the final output (SURVEY.md O1).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
 from ..operators import (
+    flagged_violations,
+    keyed_frame,
     media,
     payload,
     referential,
@@ -43,10 +52,20 @@ class Check:
     row_level: bool
     default: bool
     # (slice, ref slice or None, spec, enabled check names) -> violation
-    # rows; None for checks whose output is metrics, not rows
+    # rows, for checks that are plain Catalyst
     build: Callable | None = None
     # skipped on a slice without the reference table
     needs_ref: bool = False
+    # decode checks run inside the slice's ONE Python pass (_decode_pass):
+    # per Arrow batch of the slice's ``inputs`` columns, kernel(pdf,
+    # **params(spec)) returns the columns declared in ``metrics`` (DDL), and
+    # flags(m, spec) lists the check's (check, predicate, detail, severity)
+    # over them
+    kernel: Callable | None = None
+    inputs: tuple = ("bytes", "codec", "sr_hz")
+    params: Callable = lambda spec: {}
+    metrics: str = ""
+    flags: Callable | None = None
 
 
 def _src(df: DataFrame, spec) -> DataFrame:
@@ -70,19 +89,6 @@ def _referential(df, ref_df, spec, checks):
     return referential.referential_violations(
         df, ref_df, key_col=s.key_col, part_col=s.part_col
     )
-
-
-def _payload(df, ref_df, spec, checks):
-    if spec.payload_sample is not None:
-        # deterministic key-hash sample for the decode-dominated pass
-        # (SuiteSpec.payload_sample): independent of the table's crc32
-        # partition layout, stable across runs for a fixed salt, and pushed
-        # below the join so the ref side prunes with it
-        frac, salt = spec.payload_sample
-        key = F.col(spec.schema_spec.key_col).cast("string")
-        bucket = F.pmod(F.xxhash64(F.concat(key, F.lit(str(salt)))), F.lit(1_000_000))
-        df = df.where(bucket < F.lit(int(round(frac * 1_000_000))))
-    return payload.payload_violations(payload.payload_report(df, ref_df))
 
 
 def _byte_length(df, ref_df, spec, checks):
@@ -144,87 +150,135 @@ def _speaking_rate(df, ref_df, spec, checks):
     return violation_rows(bad, "speaking_rate", detail, 2.5)
 
 
-def _loudness(df, ref_df, spec, checks):
+def _sampled(spec) -> Column:
+    # deterministic key-hash sample for the reference comparison
+    # (SuiteSpec.payload_sample): independent of the table's crc32 partition
+    # layout and stable across runs for a fixed salt
+    frac, salt = spec.payload_sample
+    key = F.col("clip_id").cast("string")
+    bucket = F.pmod(F.xxhash64(F.concat(key, F.lit(str(salt)))), F.lit(1_000_000))
+    return bucket < F.lit(int(round(frac * 1_000_000)))
+
+
+# flag builders of the decode checks: (m, spec) -> [(check, predicate,
+# detail, severity)], m(name) naming the check's column in the decode pass
+
+
+def _payload_flags(m, spec):
+    flags = payload.payload_flags(m)
+    if spec.payload_sample is None:
+        return flags
+    # the audio checks see every clip; payload rows only the sampled keys
+    inside = _sampled(spec)
+    return [(check, inside & pred, detail, sev) for check, pred, detail, sev in flags]
+
+
+def _loudness_flags(m, spec):
     # clips that cannot be normalized to the target without hard-clipping
     target, tol = spec.loudness_bounds
-    audit = media.loudness_audit(media.audio_features(_src(df, spec)), target, tol)
+    a = media.loudness_cols(m, target, tol)
     detail = F.concat(
         F.lit("gain_db="),
-        F.round("gain_db", 2).cast("string"),
+        F.round(a["gain_db"], 2).cast("string"),
         F.lit(" exceeds headroom_db="),
-        F.round("headroom_db", 2).cast("string"),
+        F.round(a["headroom_db"], 2).cast("string"),
         F.lit(f" normalizing to {target} dBFS would clip"),
     )
-    return violation_rows(audit.where(F.col("verdict") == "boost_clips"), "loudness", detail, 3.0)
+    return [("loudness", a["verdict"] == "boost_clips", detail, 3.0)]
 
 
-def _dropout(df, ref_df, spec, checks):
-    audit = media.dropout_audit(_src(df, spec), min_run_ms=spec.dropout_min_run_ms)
+def _dropout_flags(m, spec):
     detail = F.concat(
         F.lit("n_dropouts="),
-        F.col("n_dropouts").cast("string"),
+        m("n_dropouts").cast("string"),
         F.lit(" max_dropout_ms="),
-        F.round("max_dropout_ms", 1).cast("string"),
+        F.round(m("max_dropout_ms"), 1).cast("string"),
     )
-    return violation_rows(audit.where(F.col("n_dropouts") > 0), "dropout", detail, 3.5)
+    return [("dropout", m("n_dropouts") > 0, detail, 3.5)]
 
 
-def _codec_sniff(df, ref_df, spec, checks):
-    audit = payload.codec_sniff_audit(_src(df, spec), ratio_threshold=spec.codec_sniff_ratio)
+def _codec_sniff_flags(m, spec):
     detail = F.concat(
         F.lit("declared="),
-        F.col("codec"),
+        m("codec"),
         F.lit(" roughness="),
-        F.round("roughness_declared", 3).cast("string"),
+        F.round(m("roughness_declared"), 3).cast("string"),
         F.lit(" best_alt="),
-        F.coalesce(F.col("best_alt_codec"), F.lit("?")),
+        F.coalesce(m("best_alt_codec"), F.lit("?")),
         F.lit(" ratio="),
-        F.round("roughness_ratio", 2).cast("string"),
+        F.round(m("roughness_ratio"), 2).cast("string"),
     )
-    return violation_rows(audit.where(F.col("suspect_codec")), "codec_sniff", detail, 4.2)
+    return [("codec_sniff", m("suspect_codec"), detail, 4.2)]
 
 
-def _tonal(df, ref_df, spec, checks):
-    audit = media.tonal_audit(_src(df, spec), flatness_threshold=spec.tonal_flatness_threshold)
+def _tonal_flags(m, spec):
     detail = F.concat(
         F.lit("flatness="),
-        F.format_number(F.col("spectral_flatness"), 6),
+        F.format_number(m("spectral_flatness"), 6),
         F.lit(" dominant_hz="),
-        F.round("dominant_hz", 1).cast("string"),
+        F.round(m("dominant_hz"), 1).cast("string"),
     )
-    return violation_rows(audit.where(F.col("tonal")), "tonal", detail, 2.5)
+    return [("tonal", m("tonal"), detail, 2.5)]
 
 
-def _stutter(df, ref_df, spec, checks):
-    frame_ms, min_repeats = spec.stutter_params
-    audit = media.stutter_audit(_src(df, spec), frame_ms=frame_ms, min_repeats=min_repeats)
+def _stutter_flags(m, spec):
     detail = F.concat(
         F.lit("n_stutters="),
-        F.col("n_stutters").cast("string"),
+        m("n_stutters").cast("string"),
         F.lit(" max_repeat_frames="),
-        F.col("max_repeat_frames").cast("string"),
+        m("max_repeat_frames").cast("string"),
     )
-    return violation_rows(audit.where(F.col("n_stutters") > 0), "stutter", detail, 3.5)
+    return [("stutter", m("n_stutters") > 0, detail, 3.5)]
 
 
 # table order is the order of the default ``checks`` tuple (part of every
-# spec hash: reordering the default entries invalidates all checkpoints) and
-# of the composed union. Each opt-in audio check runs its own decode pass.
+# spec hash: reordering the default entries invalidates all checkpoints).
+# The decode checks (payload and the audio opt-ins) share one Python pass.
 CHECKS = (
     Check("schema", row_level=True, default=True, build=_schema),
     Check("stats", row_level=True, default=True),
     Check("uniqueness", row_level=False, default=True, build=_uniqueness),
     Check("referential", row_level=False, default=True, build=_referential, needs_ref=True),
     Check("drift", row_level=False, default=True),
-    Check("payload", row_level=True, default=True, build=_payload, needs_ref=True),
+    Check(
+        "payload", row_level=True, default=True, needs_ref=True,
+        kernel=payload.payload_metrics, metrics=payload.PAYLOAD_METRICS,
+        inputs=("bytes", "codec", "sr_hz", "dur_ms", "transcript"),
+        flags=_payload_flags,
+    ),
     Check("byte_length", row_level=True, default=True, build=_byte_length),
     Check("encoding", row_level=True, default=True, build=_encoding),
     Check("speaking_rate", row_level=True, default=False, build=_speaking_rate),
-    Check("loudness", row_level=True, default=False, build=_loudness),
-    Check("dropout", row_level=True, default=False, build=_dropout),
-    Check("codec_sniff", row_level=True, default=False, build=_codec_sniff),
-    Check("tonal", row_level=True, default=False, build=_tonal),
-    Check("stutter", row_level=True, default=False, build=_stutter),
+    Check(
+        "loudness", row_level=True, default=False,
+        kernel=media.audio_feature_metrics, metrics=media.AUDIO_FEATURE_METRICS,
+        flags=_loudness_flags,
+    ),
+    Check(
+        "dropout", row_level=True, default=False,
+        kernel=media.dropout_metrics, metrics=media.DROPOUT_METRICS,
+        params=lambda spec: {"min_run_ms": spec.dropout_min_run_ms},
+        flags=_dropout_flags,
+    ),
+    Check(
+        "codec_sniff", row_level=True, default=False,
+        kernel=payload.codec_sniff_metrics, metrics=payload.CODEC_SNIFF_METRICS,
+        inputs=("bytes", "codec"),
+        params=lambda spec: {"ratio_threshold": spec.codec_sniff_ratio},
+        flags=_codec_sniff_flags,
+    ),
+    Check(
+        "tonal", row_level=True, default=False,
+        kernel=media.tonal_metrics, metrics=media.TONAL_METRICS,
+        params=lambda spec: {"flatness_threshold": spec.tonal_flatness_threshold},
+        flags=_tonal_flags,
+    ),
+    Check(
+        "stutter", row_level=True, default=False,
+        kernel=media.stutter_metrics, metrics=media.STUTTER_METRICS,
+        params=lambda spec: dict(zip(("frame_ms", "min_repeats"), spec.stutter_params)),
+        flags=_stutter_flags,
+    ),
 )
 
 ALL_CHECKS = tuple(c.name for c in CHECKS)
@@ -232,18 +286,102 @@ DEFAULT_CHECKS = tuple(c.name for c in CHECKS if c.default)
 NON_ROW_LEVEL_CHECKS = tuple(c.name for c in CHECKS if not c.row_level)
 
 
+# the ref columns payload compares against
+_REF_COLS = ("pcm_ref", "transcript_ref")
+
+
+def _on_rows(metrics: dict, rows: np.ndarray) -> dict:
+    """Kernel columns computed over the ``rows`` subset of a batch, spread
+    back over the whole batch: null off the subset."""
+    at = np.flatnonzero(rows)
+    return {k: pd.Series(v, index=at).reindex(range(rows.size)) for k, v in metrics.items()}
+
+
+def _decode_pass(df: DataFrame, ref_df, spec, entries: list) -> DataFrame:
+    """Every enabled decode check of one slice in ONE ``mapInPandas``: the
+    clips cross the JVM->Python boundary once, each check's kernel runs on
+    the same Arrow batch, and the pass yields one wide metrics row per clip
+    (columns ``<check>_<metric>``). The violation rows then come from one
+    Catalyst projection over that row (``flagged_violations``).
+
+    With payload on, the pass runs over the slice left-joined to the
+    reference, so a clip with k ref rows arrives k times: payload rows fan
+    out per ref row, as a ref comparison must, while the per-clip audio
+    kernels run on the first arrival of each clip row only (its later
+    arrivals carry null metrics, which no predicate passes). A
+    ``monotonically_increasing_id`` tags each clip row before the join, and
+    the kernel keeps the tags its task has already measured: a clip row's
+    matches all reach one task, but not necessarily in a row (a shuffled
+    hash join that builds the clip side streams the ref rows)."""
+    # the kernels name their key/part columns clip_id/part
+    inputs = ["clip_id", "part"] + [col for c in entries for col in c.inputs]
+    src = _src(df, spec).select(*dict.fromkeys(inputs))
+    per_clip = [c for c in entries if not c.needs_ref]
+    if any(c.needs_ref for c in entries):
+        key = spec.schema_spec.key_col
+        ref = ref_df.select(F.col(key).alias("clip_id"), *_REF_COLS)
+        if spec.payload_sample is not None:
+            ref = ref.where(_sampled(spec))
+            if not per_clip:
+                # nothing else decodes: only the sample crosses to Python
+                src = src.where(_sampled(spec))
+        if per_clip:
+            src = src.withColumn("_row", F.monotonically_increasing_id())
+        src = src.join(ref, "clip_id", "left")
+
+    fields = {c.name: c.metrics.split(", ") for c in entries}
+    kernels = [
+        (c.name, c.kernel, c.params(spec), c.needs_ref, [f.split()[0] for f in fields[c.name]])
+        for c in entries
+    ]
+
+    def fused_checks_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        seen = np.empty(0, np.int64)  # tags of the clip rows already measured
+        for pdf in it:
+            first = None
+            if "_row" in pdf:
+                row = pdf["_row"].to_numpy()
+                first = ~pd.Index(row).duplicated() & ~np.isin(row, seen)
+                seen = np.concatenate((seen, row[first]))
+            out = {}
+            for name, kernel, params, per_ref, names in kernels:
+                if per_ref or first is None or first.all():
+                    metrics = kernel(pdf, **params)
+                elif first.any():
+                    metrics = _on_rows(kernel(pdf[first], **params), first)
+                else:  # every row continues a clip row an earlier batch began
+                    metrics = dict.fromkeys(names, np.full(len(pdf), None))
+                out.update({f"{name}_{k}": v for k, v in metrics.items()})
+            yield keyed_frame(pdf, out, "codec")
+
+    metrics = ", ".join(f"{name}_{f}" for name, fs in fields.items() for f in fs)
+    wide = src.mapInPandas(
+        fused_checks_kernel, schema=f"clip_id string, part int, codec string, {metrics}"
+    )
+    flags = []
+    for c in entries:
+        # a check's metric n is column <check>_n; codec is the input's
+        m = lambda n, c=c: F.col(n if n == "codec" else f"{c.name}_{n}")  # noqa: E731
+        flags += c.flags(m, spec)
+    return flagged_violations(wide, flags)
+
+
 def wave_violations(
     df: DataFrame, ref_df: DataFrame | None, spec, checks: tuple
 ) -> DataFrame | None:
     """Compose every requested check's violation rows over one slice of the
-    clips table into a single lazy plan (ONE scan per slice). None when no
-    check applies. Shared by the batch suite's per-wave path, its
-    whole-table key checks and the streaming ingest path
-    (streaming/incremental.py), so batch and ingest-time validation agree
-    check-for-check on the row-level set."""
-    parts = [
-        c.build(df, ref_df, spec, checks)
+    clips table into a single lazy plan (ONE scan per slice, ONE Python pass
+    for the decode checks). None when no check applies. Shared by the batch
+    suite's per-wave path, its whole-table key checks and the streaming
+    ingest path (streaming/incremental.py), so batch and ingest-time
+    validation agree check-for-check on the row-level set."""
+    on = [
+        c
         for c in CHECKS
-        if c.build is not None and c.name in checks and (ref_df is not None or not c.needs_ref)
+        if c.name in checks and (ref_df is not None or not c.needs_ref)
     ]
+    parts = [c.build(df, ref_df, spec, checks) for c in on if c.build is not None]
+    decode = [c for c in on if c.kernel is not None]
+    if decode:
+        parts.append(_decode_pass(df, ref_df, spec, decode))
     return reduce(DataFrame.unionByName, parts) if parts else None

@@ -58,30 +58,31 @@ class SuiteSpec:
     # transcript<->audio plausibility bounds (words/sec); the check itself is
     # opt-in via checks=(..., "speaking_rate") — see plans/checks.py
     speaking_rate_bounds: tuple = (0.3, 6.0)
+    # The audio opt-ins below share the wave's ONE Python pass with the
+    # payload check (plans/checks.py:_decode_pass): enabling one adds its
+    # kernel's numpy work on batches already in Python, not another trip
+    # of the payload bytes across the JVM->Python boundary.
     # loudness-normalization feasibility (target dBFS, ok-tolerance dB);
     # opt-in via checks=(..., "loudness") — see media.loudness_audit.
-    # NOTE: runs its own decode pass; pair with a suite that skips payload
-    # or accept the second decode of the wave.
     loudness_bounds: tuple = (-20.0, 1.0)
     # interior-dropout detection (mid-clip digital-silence runs >= this many
     # ms — buffer underruns / network dropouts); opt-in via
-    # checks=(..., "dropout") — see media.dropout_audit. Same cost note
-    # as loudness: its own decode pass.
+    # checks=(..., "dropout") — see media.dropout_audit.
     dropout_min_run_ms: float = 30.0
     # mislabeled-codec sniff (declared-law decode noise-like while an
     # alternative decodes to plausible audio; catches ulaw<->alaw swaps
     # byte_length cannot see); opt-in via checks=(..., "codec_sniff") —
-    # see payload.codec_sniff_audit. Costs ~4x one decode pass:
-    # ingest-audit tier, not every run.
+    # see payload.codec_sniff_audit. Inside the shared pass it still
+    # decodes every clip under all 4 laws: the heaviest audio kernel.
     codec_sniff_ratio: float = 3.0
     # synthetic narrowband-tone detection (Hann-windowed spectral flatness
     # under this threshold => machine-generated tone, not recorded audio);
-    # opt-in via checks=(..., "tonal") — see media.tonal_audit. Own
-    # decode pass (FFT bounded at 8192 samples/clip): ingest-audit tier.
+    # opt-in via checks=(..., "tonal") — see media.tonal_audit. FFT
+    # bounded at 8192 samples/clip.
     tonal_flatness_threshold: float = 2e-3
     # stuck-buffer detection (>= min_repeats bit-identical non-silent
     # frames of frame_ms each); opt-in via checks=(..., "stutter") — see
-    # media.stutter_audit. Own decode pass, same cost note as dropout.
+    # media.stutter_audit.
     stutter_params: tuple = (20.0, 3)
     # payload-check COST tier: the reference-comparison pass (decode + SNR
     # + transcript equality — the one check whose cost is dominated by
@@ -94,7 +95,9 @@ class SuiteSpec:
     # the sample" — the sample is part of the spec hash, so changing
     # fraction or salt (e.g. rotating salt to sweep coverage across runs)
     # deliberately invalidates prior partition verdicts: a different
-    # evidence basis is a different verdict. None = full coverage.
+    # evidence basis is a different verdict. With audio opt-ins on, every
+    # clip still enters the shared decode pass (they need it); the sample
+    # then prunes the ref side and the payload rows. None = full coverage.
     payload_sample: tuple | None = None
     # partitioning contract: when the table is bucket-partitioned by
     # hash(key) (Iceberg bucket(clip_id) / our crc32 synth), uniqueness and

@@ -642,12 +642,14 @@ def bucketed_payload_plans(spark) -> dict[str, str]:
         wave_p = plan_of(wave_violations(clips, ref, spec, spec.checks))
         every = SuiteSpec(checks=ALL_CHECKS)
         wave_all = plan_of(wave_violations(clips, ref, every, every.checks))
+        wave_all_b = plan_of(wave_violations(cb, rb, every, every.checks))
         return {
             "bucketed": bucketed,
             "parquet": parquet,
             "wave_bucketed": wave_b,
             "wave_parquet": wave_p,
             "wave_all_checks": wave_all,
+            "wave_all_bucketed": wave_all_b,
         }
     finally:
         if old is None:
@@ -689,10 +691,19 @@ EXTRA_RULES = [
     ),
     (
         "wave_all_checks",
-        "wave plan with EVERY check in ALL_CHECKS over plain parquet: exactly "
-        "one MapInPandas per decode check (payload, loudness, dropout, "
-        "codec_sniff, tonal, stutter = 6 Python passes) and no BatchEvalPython",
-        lambda p: _nodes(p, "MapInPandas") == 6 and "BatchEvalPython" not in p,
+        "wave plan with EVERY check in ALL_CHECKS over plain parquet: the six "
+        "decode checks (payload, loudness, dropout, codec_sniff, tonal, "
+        "stutter) share exactly ONE MapInPandas and there is no BatchEvalPython",
+        lambda p: _nodes(p, "MapInPandas") == 1 and "BatchEvalPython" not in p,
+    ),
+    (
+        "wave_all_bucketed",
+        "the same every-check wave plan over bucketed tables: ONE MapInPandas "
+        "over the ref join and still ZERO shuffle Exchanges (the fused pass, "
+        "its clip-row tag and the ref join add no shuffle)",
+        lambda p: _nodes(p, "MapInPandas") == 1
+        and _nodes(p, "Exchange") == 0
+        and _nodes(p, "BroadcastExchange") >= 1,
     ),
 ]
 

@@ -261,20 +261,38 @@ def test_byte_length_fractional_truncation_not_ok(spark):
     assert out["one_sample_short"]["verdict"] == "ok"  # within aligned tolerance
 
 
-def test_byte_length_custom_key_and_part_cols(spark):
+@pytest.mark.parametrize(
+    "check,reported",
+    [("byte_length", "byte_length"), ("payload", "dur_mismatch")],
+    ids=["byte_length", "payload"],
+)
+def test_byte_length_custom_key_and_part_cols(spark, check, reported):
+    """A table keyed utt_id/pt: the clip side is read through key_col /
+    part_col, and payload's ref side (keyed utt_id too) joins on key_col."""
+    import numpy as np
     import pandas as pd
 
     from audit_anomaly_detection_etl_spark.operators.schema_check import TableSchemaSpec
     from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
     from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
-    rows = [("u1", 3, b"\x00\x00", "pcm_s16le", 8000, 99999)]
+    # one s16 sample declared as 99999 ms; the ref matches bit-exactly
+    rows = [("u1", 3, b"\x00\x00", "pcm_s16le", 8000, 99999, "hi")]
     df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["utt_id", "pt", "bytes", "codec", "sr_hz", "dur_ms"])
+        pd.DataFrame(
+            rows, columns=["utt_id", "pt", "bytes", "codec", "sr_hz", "dur_ms", "transcript"]
+        )
+    )
+    ref = spark.createDataFrame(
+        pd.DataFrame(
+            [("u1", np.zeros(1, dtype=np.float32).tobytes(), "hi")],
+            columns=["utt_id", "pcm_ref", "transcript_ref"],
+        )
     )
     spec = SuiteSpec(schema_spec=TableSchemaSpec([], key_col="utt_id", part_col="pt"))
-    v = wave_violations(df, None, spec, ("byte_length",)).collect()
+    v = wave_violations(df, ref, spec, (check,)).collect()
     assert len(v) == 1 and v[0]["key"] == "u1" and v[0]["part"] == 3
+    assert v[0]["check"] == reported
 
 
 def test_null_metadata_not_reported_as_dur_mismatch(spark):

@@ -86,3 +86,60 @@ def test_sample_is_part_of_spec_hash_and_loader():
         spec_from_dict({"payload_sample": [1.5, "x"]})
     with pytest.raises(ValueError):
         spec_from_dict({"payload_sample": [0.5]})
+
+
+def test_sample_gates_payload_rows_only(spark, tmp_path):
+    """A sampled payload check beside audio checks: the wave's one decode
+    pass sees every clip, so dropout and tonal rows cover every key while
+    payload rows appear only for the sampled keys."""
+    import numpy as np
+    import pyarrow as pa
+    import pyspark.sql.functions as F
+
+    from audit_anomaly_detection_etl_spark.functions import codecs
+    from audit_anomaly_detection_etl_spark.plans.runner import wave_violations
+    from audit_anomaly_detection_etl_spark.sources import synth
+
+    t = synth.generate_clips(n_clips=400, n_parts=4, seed=9, tone_rate=0.05)
+    clips_pd = t.clips.to_pandas()
+    dirty = set(t.violations_expected.column("clip_id").to_pylist())
+    long_clean = [
+        i for i in range(len(clips_pd))
+        if clips_pd.at[i, "clip_id"] not in dirty and clips_pd.at[i, "dur_ms"] >= 300
+    ]
+    for i in long_clean[:12]:  # a 50 ms interior dropout
+        codec, sr = clips_pd.at[i, "codec"], int(clips_pd.at[i, "sr_hz"])
+        pcm = codecs.decode(clips_pd.at[i, "bytes"], codec).astype(np.float64)
+        mid = len(pcm) // 2
+        pcm[mid : mid + sr // 20] = 0.0
+        clips_pd.at[i, "bytes"] = codecs.encode(pcm, codec)
+    t.clips = pa.Table.from_pandas(clips_pd, schema=t.clips.schema, preserve_index=False)
+    synth.write_clip_tables(t, str(tmp_path))
+    clips = spark.read.parquet(str(tmp_path / "clips"))
+    ref = spark.read.parquet(str(tmp_path / "clips_ref"))
+
+    def rows(checks, sample=None):
+        spec = SuiteSpec(checks=checks, payload_sample=sample)
+        df = wave_violations(clips, ref, spec, checks).toPandas()
+        return sorted(map(tuple, df[["key", "check", "detail", "part", "severity"]].values))
+
+    sample = (0.5, "s1")
+    got = rows(("payload", "dropout", "tonal"), sample)
+    audio = rows(("dropout", "tonal"))
+    payload_full = rows(("payload",))
+    sampled = {
+        r["clip_id"]
+        for r in clips.where(
+            F.pmod(F.xxhash64(F.concat(F.col("clip_id"), F.lit("s1"))), F.lit(10**6))
+            < F.lit(500_000)
+        ).collect()
+    }
+    got_audio = [r for r in got if r[1] in ("dropout", "tonal")]
+    got_payload = [r for r in got if r[1] in PAYLOAD_CHECKS]
+    assert len(got) == len(got_audio) + len(got_payload)
+    assert got_audio == audio
+    assert {"dropout", "tonal"} <= {r[1] for r in audio}
+    assert {r[0] for r in audio} - sampled  # unsampled keys keep their audio rows
+    assert got_payload == [r for r in payload_full if r[0] in sampled]
+    assert got_payload == rows(("payload",), sample)
+    assert 0 < len(got_payload) < len(payload_full)

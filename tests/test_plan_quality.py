@@ -50,15 +50,8 @@ def test_bucketed_payload_join_rule(bucketed_plans, key, rule, pred):
 
 
 def test_wave_plan_kernels_are_named_per_check(bucketed_plans):
-    """Every Python pass of the all-checks wave plan carries its own kernel
-    name, so a plan's (and Spark's per-operator metrics') MapInPandas nodes
-    map back to the check that runs them."""
+    """The all-checks wave plan's one Python pass carries the fused decode
+    kernel's name, so a plan's (and Spark's per-operator metrics')
+    MapInPandas node maps back to the decode checks it runs."""
     names = mapinpandas_kernels(bucketed_plans["wave_all_checks"])
-    assert sorted(names) == [
-        "audio_features_kernel",  # loudness
-        "codec_sniff_kernel",
-        "dropout_kernel",
-        "payload_kernel",
-        "stutter_kernel",
-        "tonal_kernel",
-    ], names
+    assert names == ["fused_checks_kernel"], names
