@@ -370,8 +370,11 @@ def wave_violations(
     df: DataFrame, ref_df: DataFrame | None, spec, checks: tuple
 ) -> DataFrame | None:
     """Compose every requested check's violation rows over one slice of the
-    clips table into a single lazy plan (ONE scan per slice, ONE Python pass
-    for the decode checks). None when no check applies. Shared by the batch
+    clips table into a single lazy plan: a union with one branch per
+    Catalyst check plus ONE Python pass for all the decode checks. Nothing
+    is cached beneath the union, so each branch scans the slice itself
+    (the default checks scan the clips slice 7 times and the ref slice
+    twice). None when no check applies. Shared by the batch
     suite's per-wave path, its whole-table key checks and the streaming
     ingest path (streaming/incremental.py), so batch and ingest-time
     validation agree check-for-check on the row-level set."""

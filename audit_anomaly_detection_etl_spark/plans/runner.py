@@ -4,16 +4,24 @@ Execution model (SURVEY.md §7.1 steps 2+7):
 
 - ``plan_resume`` (driver, O(partitions)) decides which partitions still need
   validation under the current (snapshot, spec) lineage.
+- each table root is read ONCE per run (``tableio.read_table``: the file
+  listing and schema inference happen there). Waves and the legacy drift
+  histograms take partition-pruned slices of those frames
+  (``tableio.partition_slice``); the ``key_partitioned=False`` ref side and
+  the global key checks use them whole. No wave lists a table again.
 - pending partitions are processed in *waves* of ``wave_size`` partitions.
-  Each wave is ONE Spark job over a partition-pruned read; its per-partition
-  verdict markers are written only after the wave completes, so a kill
-  loses at most one wave of work and a resume re-runs exactly the
-  unmarked partitions. (On a 1000-executor cluster a wave is sized to keep
-  every executor busy — e.g. hundreds of Iceberg partitions per wave; waves
-  exist for checkpoint granularity, not parallelism.)
-- within a wave, ALL checks compose into a single violations plan (union of
-  lazy DataFrames over one cached scan) plus one metrics pass, so the clips
-  table is read once per wave for the row-level checks.
+  A wave's per-partition verdict markers are written only after the wave
+  completes, so a kill loses at most one wave of work and a resume re-runs
+  exactly the unmarked partitions. (On a 1000-executor cluster a wave is
+  sized to keep every executor busy — e.g. hundreds of Iceberg partitions
+  per wave; waves exist for checkpoint granularity, not parallelism.)
+- within a wave, all row-level checks compose into one violations plan: a
+  union of lazy per-check DataFrames over the wave slice. Each branch of
+  the union scans the slice itself; nothing is cached beneath the union (the
+  default checks over a key-partitioned table scan the clips slice 7 times
+  and the ref slice twice). The union's RESULT is persisted, so the exact
+  per-check counts and the capped sink write compute it once. One more
+  aggregate over the slice computes the stats and drift histograms.
 
 Check decomposability: uniqueness and referential checks are run per-wave,
 which is correct when the table is bucket-partitioned by hash(clip_id)
@@ -30,8 +38,10 @@ run, never checkpointed) and in ``SuiteResult.global_violations_by_check``.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,21 +84,24 @@ _KEY_CHECKS = tuple(c for c in CHECKS if c.build is not None and not c.row_level
 
 
 def _global_key_checks(
-    spark: SparkSession, clips_root: str, ref_root: str | None, spec: SuiteSpec
+    read: Callable[[str], DataFrame],
+    clips_root: str, ref_root: str | None, spec: SuiteSpec
 ) -> DataFrame | None:
     """key_partitioned=False path: the ``_KEY_CHECKS`` over the FULL table,
     every invocation. Cross-partition duplicates / orphans cannot be
     decomposed per-wave when the partition column is not a key function, so
     these checks are excluded from the resumable per-wave plan and
     recomputed here — scanning only (key, part) columns, which is cheap
-    relative to payload decode (the scan prunes to two columns)."""
+    relative to payload decode (the scan prunes to two columns). ``read``
+    is the run's once-per-root table reader."""
     entries = [c for c in _KEY_CHECKS if c.name in spec.checks]
     if not entries:
         return None
-    full = tableio.read_table(spark, clips_root)
     need_ref = ref_root and any(c.needs_ref for c in entries)
-    ref_full = tableio.read_table(spark, ref_root) if need_ref else None
-    return wave_violations(full, ref_full, spec, tuple(c.name for c in entries))
+    ref_full = read(ref_root) if need_ref else None
+    return wave_violations(
+        read(clips_root), ref_full, spec, tuple(c.name for c in entries)
+    )
 
 
 def _cap_sink(viols: DataFrame, cap: int | None) -> DataFrame:
@@ -123,6 +136,15 @@ def run_suite(
     fail_after_waves: int | None = None,
 ) -> SuiteResult:
     spec = spec or SuiteSpec()
+    part_col = spec.schema_spec.part_col
+    if part_col != "part":
+        # partitions are listed from part=K directories and sliced on the
+        # 'part' column: any other name would find no partitions and report
+        # a clean run of nothing
+        raise ValueError(
+            f"run_suite needs the table partitioned by 'part'; the spec's "
+            f"partition column is {part_col!r}"
+        )
     if "encoding" in spec.checks and not any(
         c.name == spec.encoding_text_col for c in spec.schema_spec.columns
     ):
@@ -135,7 +157,10 @@ def run_suite(
     spec_hash = spec.spec_hash()
     snap, pending, done, part_fps = plan_resume(clips_root, store, spec_hash, spark)
 
-    full = tableio.read_table(spark, clips_root)
+    # the run's one read per root: every slice below is cut from these
+    # frames, so each root is listed once per run, not once per wave
+    read = functools.cache(lambda root: tableio.read_table(spark, root))
+    full = read(clips_root)
     schema_issues = (
         schema_check.schema_diff(full.schema, spec.schema_spec) if "schema" in spec.checks else []
     )
@@ -168,7 +193,7 @@ def run_suite(
         if fail_after_waves is not None and w_i >= fail_after_waves:
             raise KilledMidRun(f"injected kill before wave {w_i} (parts {wave})")
 
-        wave_df = tableio.read_partitions(spark, clips_root, wave)
+        wave_df = tableio.partition_slice(full, wave)
         # payload joins ref on key: when the partition column is NOT a key
         # function, a clip's ref row can live outside the wave, and a
         # wave-pruned ref side would silently skip its SNR/transcript checks
@@ -177,9 +202,9 @@ def run_suite(
         if ref_root is None:
             ref_df = None
         elif spec.key_partitioned:
-            ref_df = tableio.read_partitions(spark, ref_root, wave)
+            ref_df = tableio.partition_slice(read(ref_root), wave)
         else:
-            ref_df = tableio.read_table(spark, ref_root)
+            ref_df = read(ref_root)
 
         key_names = () if spec.key_partitioned else [c.name for c in _KEY_CHECKS]
         wave_checks = tuple(c for c in spec.checks if c not in key_names)
@@ -217,7 +242,6 @@ def run_suite(
         # every aggregate is algebraic, so the extra bin-count columns ride
         # the same map-side combine; the wave is scanned once for all
         # metrics (columns pruned to the stat/drift columns).
-        part_col = spec.schema_spec.part_col
         need_stats = "stats" in spec.checks
         need_hists = drift_refs is not None
         # NB: no binary columns in the stat set — a null-rate over bytes
@@ -280,7 +304,7 @@ def run_suite(
             by_part.setdefault(int(r["part"]), {})[r["check"]] = int(r["n"])
         drift_by_part: dict[int, list] = {}
         for m in wave_drift:
-            drift_by_part.setdefault(int(m[spec.schema_spec.part_col]), []).append(m)
+            drift_by_part.setdefault(int(m[part_col]), []).append(m)
 
         for p in wave:
             checks_counts = by_part.get(p, {})
@@ -288,12 +312,12 @@ def run_suite(
             drifted = any(m["drifted"] for m in drift_by_part.get(p, []))
             metrics = {
                 "column_stats": [
-                    {k: v for k, v in r.items() if k != spec.schema_spec.part_col}
+                    {k: v for k, v in r.items() if k != part_col}
                     for r in stats_rows
-                    if r[spec.schema_spec.part_col] == p
+                    if r[part_col] == p
                 ],
                 "drift": [
-                    {k: v for k, v in m.items() if k != spec.schema_spec.part_col}
+                    {k: v for k, v in m.items() if k != part_col}
                     for m in drift_by_part.get(p, [])
                 ],
                 # raw additive bin counts: lineage for this partition AND the
@@ -337,7 +361,7 @@ def run_suite(
                 legacy.append(p)
         if legacy:
             extra = drift.grouped_histograms(
-                tableio.read_partitions(spark, clips_root, legacy), spec.drift_specs
+                tableio.partition_slice(full, legacy), spec.drift_specs
             )
             for col, arr in extra.get((), {}).items():
                 total[col] += arr
@@ -355,7 +379,7 @@ def run_suite(
     global_path = None
     global_by_check = None
     if not spec.key_partitioned:
-        g = _global_key_checks(spark, clips_root, ref_root, spec)
+        g = _global_key_checks(read, clips_root, ref_root, spec)
         if g is not None:
             global_path = f"{checkpoint_dir.rstrip('/')}/violations_global"
             g = g.select(*VIOLATION_COLS).persist()

@@ -333,7 +333,14 @@ def read_partitions(spark: SparkSession, root: str, parts: list[int]) -> DataFra
     (PartitionFilters in the scan node), manifest pruning for Iceberg tables
     — so only the listed partitions are touched.
     """
-    df = read_table(spark, root)
+    return partition_slice(read_table(spark, root), parts)
+
+
+def partition_slice(df: DataFrame, parts: list[int]) -> DataFrame:
+    """The ``parts`` partitions of a :func:`read_table` frame, pruned the
+    same way as :func:`read_partitions`. Slicing one frame again and again
+    reuses its file listing: a parquet root is listed (and its schema
+    inferred) when it is read, not when a slice of it is planned."""
     from pyspark.sql import functions as F
 
     return df.where(F.col("part").isin([int(p) for p in parts]))
