@@ -31,28 +31,16 @@ VIOLATION_SCHEMA = StructType(
 VIOLATION_COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 
 
-def violation_rows(df, check: str, detail, severity: float, key: str = "clip_id"):
-    """The VIOLATION_SCHEMA projection every check ends in: one row per row
-    of ``df`` (already filtered to the violating rows), under the constant
-    ``check`` name and ``severity``, with ``detail`` a string Column."""
-    from pyspark.sql import functions as F
-
-    return df.select(
-        F.col(key).alias("key"),
-        F.lit(check).alias("check"),
-        detail.alias("detail"),
-        F.col("part").cast("int").alias("part"),
-        F.lit(severity).alias("severity"),
-    )
-
-
-def flagged_violations(df, flags):
+def flagged_violations(df, flags, key: str = "clip_id", part: str = "part"):
     """VIOLATION_SCHEMA rows from per-row flags in ONE projection: ``flags``
     lists ``(check, predicate, detail, severity)``; each row of ``df`` yields
     one violation per predicate that holds (a null predicate never does),
-    via ``explode(array_compact(array(when(pred, struct(...)), ...)))``."""
+    via ``explode(array_compact(array(when(pred, struct(...)), ...)))``,
+    keyed by its ``key`` and ``part`` columns."""
     from pyspark.sql import functions as F
 
+    if not flags:
+        return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
     hits = F.array_compact(
         F.array(
             *[
@@ -68,7 +56,9 @@ def flagged_violations(df, flags):
             ]
         )
     )
-    return df.select(F.col("clip_id").alias("key"), "part", F.explode(hits).alias("v")).select(
+    return df.select(
+        F.col(key).alias("key"), F.col(part).alias("part"), F.explode(hits).alias("v")
+    ).select(
         "key",
         F.col("v.c").alias("check"),
         F.col("v.d").alias("detail"),

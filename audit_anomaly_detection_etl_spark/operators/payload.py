@@ -234,6 +234,20 @@ def byte_length_audit(
     Returns (clip_id, part, n_bytes, expected_bytes, delta_samples,
     verdict).
     """
+    # metadata column names (bytes/sr_hz/dur_ms/codec) are the input-hint
+    # contract; only the key/partition columns are spec-configurable, and
+    # they normalize to (clip_id, part) in the output
+    cols = byte_length_cols(tolerance_samples)
+    return clips.select(
+        F.col(key_col).alias("clip_id"),
+        F.col(part_col).alias("part"),
+        *[c.alias(k) for k, c in cols.items()],
+    )
+
+
+def byte_length_cols(tolerance_samples: int = 1) -> dict:
+    """``byte_length_audit``'s measured columns as Catalyst expressions over
+    the table's own bytes/sr_hz/dur_ms/codec columns."""
     bps = F.create_map(
         *[
             x
@@ -267,17 +281,12 @@ def byte_length_audit(
         .when(byte_delta < 0, F.lit("truncated"))
         .otherwise(F.lit("oversized"))
     )
-    # metadata column names (bytes/sr_hz/dur_ms/codec) are the input-hint
-    # contract; only the key/partition columns are spec-configurable, and
-    # they normalize to (clip_id, part) in the output
-    return clips.select(
-        F.col(key_col).alias("clip_id"),
-        F.col(part_col).alias("part"),
-        n_bytes.alias("n_bytes"),
-        F.when(~bad_meta & bps.isNotNull(), exp_bytes).alias("expected_bytes"),
-        F.when(~bad_meta & bps.isNotNull(), delta).alias("delta_samples"),
-        verdict.alias("verdict"),
-    )
+    return {
+        "n_bytes": n_bytes,
+        "expected_bytes": F.when(~bad_meta & bps.isNotNull(), exp_bytes),
+        "delta_samples": F.when(~bad_meta & bps.isNotNull(), delta),
+        "verdict": verdict,
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -1,20 +1,18 @@
-"""Referential-integrity checks via anti-joins.
+"""Referential-integrity checks via joins.
 
 Reference analogue: the audit<->questionnaire substring-membership counting
 (SURVEY.md J6, features_engineering/nodes.py:300-335) and the UI's
 ``np.setdiff1d`` on id arrays (app_tab/interpretation.py:34). The north rule
-upgrades these to proper transcript<->clip referential checks as
-broadcast / sort-merge anti-joins.
+upgrades these to proper transcript<->clip referential checks as joins.
 
-Strategy selection:
-- ``broadcast=True``  -> hint ``F.broadcast`` on the reference side; correct
-  when the ref keyset fits executor memory (dimension-table case).
-- ``broadcast=False`` -> plain join; Catalyst/AQE picks sort-merge or
-  shuffled-hash for two large sides, and AQE skew-split handles hot keys.
-
-Both directions are emitted: rows with no reference (missing_ref) and
-reference rows with no data row (orphan_ref) — the latter is the reference
-repo's "questionnaire question never visited" analogue.
+The suite's check (``referential_violations``) is ONE full outer join of the
+clip keys with the reference keys, which emits both directions from one
+shuffle: rows with no reference (missing_ref) and reference rows with no
+data row (orphan_ref) — the latter is the reference repo's "questionnaire
+question never visited" analogue. Catalyst/AQE picks sort-merge or
+shuffled-hash for the two sides (a full outer join cannot broadcast), AQE
+skew-split handles hot keys, and key-bucketed tables join with no shuffle.
+``anti_join`` keeps the one-direction form for the catalog.
 """
 
 from __future__ import annotations
@@ -22,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import VIOLATION_COLS
+from . import flagged_violations
 
 
 def anti_join(left: DataFrame, right: DataFrame, key: str, broadcast: bool = True) -> DataFrame:
@@ -85,29 +83,36 @@ def referential_violations(
     ref: DataFrame,
     key_col: str = "clip_id",
     part_col: str = "part",
-    broadcast: bool = False,
 ) -> DataFrame:
-    """Both-direction orphan detection as VIOLATION_SCHEMA rows."""
-    missing = anti_join(
-        df.select(key_col, part_col), ref, key_col, broadcast=broadcast
-    ).select(
-        F.col(key_col).alias("key"),
-        F.lit("referential_missing_ref").alias("check"),
-        F.lit("clip has no reference row").alias("detail"),
-        F.col(part_col).cast("int").alias("part"),
-        F.lit(2.0).alias("severity"),
+    """Both-direction orphan detection as VIOLATION_SCHEMA rows: a clip row
+    the join leaves unmatched has no reference row, a reference row it
+    leaves unmatched has no clip. A null key matches nothing, so it lands on
+    its own side; a reference table without ``part_col`` gives null-part
+    orphans."""
+    clip = df.select(
+        F.col(key_col).alias("_ck"), F.col(part_col).cast("int").alias("_cp"),
+        F.lit(True).alias("_clip"),
     )
-    orphan_part = (
-        F.col(part_col).cast("int") if part_col in ref.columns else F.lit(None).cast("int")
+    ref_part = F.col(part_col) if part_col in ref.columns else F.lit(None)
+    refs = ref.select(
+        F.col(key_col).alias("_rk"), ref_part.cast("int").alias("_rp"),
+        F.lit(True).alias("_ref"),
     )
-    orphans = anti_join(ref, df, key_col, broadcast=broadcast).select(
-        F.col(key_col).alias("key"),
-        F.lit("referential_orphan_ref").alias("check"),
-        F.lit("reference row has no clip").alias("detail"),
-        orphan_part.alias("part"),
-        F.lit(1.0).alias("severity"),
+    joined = clip.join(refs, F.col("_ck") == F.col("_rk"), "full").select(
+        F.coalesce("_ck", "_rk").alias("_k"), F.coalesce("_cp", "_rp").alias("_p"),
+        "_clip", "_ref",
     )
-    return missing.select(*VIOLATION_COLS).unionByName(orphans.select(*VIOLATION_COLS))
+    return flagged_violations(
+        joined,
+        [
+            ("referential_missing_ref", F.col("_ref").isNull(),
+             F.lit("clip has no reference row"), 2.0),
+            ("referential_orphan_ref", F.col("_clip").isNull(),
+             F.lit("reference row has no clip"), 1.0),
+        ],
+        key="_k",
+        part="_p",
+    )
 
 
 def fk_health_matrix(

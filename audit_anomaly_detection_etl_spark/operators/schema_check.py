@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from . import violation_rows
+from . import flagged_violations
 
 
 @dataclass
@@ -132,6 +132,26 @@ def schema_evolution(prev_types: dict[str, str], cur: StructType) -> list[dict]:
     return out
 
 
+def constraint_flags(spec: TableSchemaSpec) -> list:
+    """The row-level domain constraints of ``spec`` as ``(check, predicate,
+    detail, severity)`` flags over the table's own columns (a null value
+    fails only its ``nullable=False`` constraint)."""
+    flags = []
+    for c in spec.columns:
+        col = F.col(c.name)
+        if not c.nullable:
+            flags.append((f"{c.name}:null", col.isNull()))
+        if c.allowed is not None:
+            flags.append((f"{c.name}:domain", col.isNotNull() & ~col.isin(c.allowed)))
+        if c.min_value is not None:
+            flags.append((f"{c.name}:below_min", col < F.lit(c.min_value)))
+        if c.max_value is not None:
+            flags.append((f"{c.name}:above_max", col > F.lit(c.max_value)))
+    for name, pred in spec.extra_predicates.items():
+        flags.append((name, ~pred))
+    return [("schema_constraint", pred, F.lit(detail), 3.0) for detail, pred in flags]
+
+
 def constraint_violations(df: DataFrame, spec: TableSchemaSpec) -> DataFrame:
     """Row-level domain violations as VIOLATION_SCHEMA rows.
 
@@ -139,29 +159,7 @@ def constraint_violations(df: DataFrame, spec: TableSchemaSpec) -> DataFrame:
     single scan; the output is the union of per-constraint violation arrays
     exploded row-wise (no self-union of N scans).
     """
-    checks: list[Column] = []
-    for c in spec.columns:
-        col = F.col(c.name)
-        if not c.nullable:
-            checks.append(F.when(col.isNull(), F.lit(f"{c.name}:null")))
-        if c.allowed is not None:
-            checks.append(F.when(col.isNotNull() & ~col.isin(c.allowed), F.lit(f"{c.name}:domain")))
-        if c.min_value is not None:
-            checks.append(F.when(col < F.lit(c.min_value), F.lit(f"{c.name}:below_min")))
-        if c.max_value is not None:
-            checks.append(F.when(col > F.lit(c.max_value), F.lit(f"{c.name}:above_max")))
-    for name, pred in spec.extra_predicates.items():
-        checks.append(F.when(~pred, F.lit(name)))
-    if not checks:
-        return df.sparkSession.createDataFrame([], schema="key string, check string, detail string, part int, severity double")
-
-    fails = F.array_compact(F.array(*checks))
-    exploded = df.select(
-        F.col(spec.key_col).alias("key"),
-        F.col(spec.part_col).alias("part"),
-        F.explode(fails).alias("detail"),
-    )
-    return violation_rows(exploded, "schema_constraint", F.col("detail"), 3.0, key="key")
+    return flagged_violations(df, constraint_flags(spec), spec.key_col, spec.part_col)
 
 
 def json_key_profile(df: DataFrame, col: str) -> DataFrame:

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import violation_rows
-
 
 def duplicate_keys(df: DataFrame, key_cols: list[str], n_salts: int = 32) -> DataFrame:
     """Keys appearing more than once, with counts. Two-phase salted agg."""
@@ -50,18 +48,17 @@ def uniqueness_violations(
         F.col(key_col).alias("__dup_key"), "dup_count"
     )
     keyed = df.select(F.col(key_col), F.col(part_col).cast("int").alias("part"))
-    return violation_rows(
-        # null-safe join: duplicated NULL keys (the most common key-integrity
-        # defect) are detected by duplicate_keys but a plain equi-join back
-        # would drop them, silently passing the uniqueness check
-        keyed.join(
-            F.broadcast(dups), keyed[key_col].eqNullSafe(dups["__dup_key"])
-        )
-        .drop("__dup_key"),
-        "uniqueness",
-        F.concat(F.lit("duplicate clip_id x"), F.col("dup_count")),
-        4.0,
-        key=key_col,
+    # null-safe join: duplicated NULL keys (the most common key-integrity
+    # defect) are detected by duplicate_keys but a plain equi-join back
+    # would drop them, silently passing the uniqueness check
+    return keyed.join(
+        F.broadcast(dups), keyed[key_col].eqNullSafe(dups["__dup_key"])
+    ).select(
+        F.col(key_col).alias("key"),
+        F.lit("uniqueness").alias("check"),
+        F.concat(F.lit("duplicate clip_id x"), F.col("dup_count")).alias("detail"),
+        "part",
+        F.lit(4.0).alias("severity"),
     )
 
 

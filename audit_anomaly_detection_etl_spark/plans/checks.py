@@ -2,19 +2,23 @@
 
 Each ``Check`` entry says whether the check is row-level (decidable on any
 slice of the table: a wave, a streaming micro-batch), whether it is on by
-default, and how it builds its violation rows from one slice: a Catalyst
-``build``, or, for the decode checks (payload and the audio opt-ins), a
-per-batch ``kernel`` plus the ``flags`` over its metrics. Every enabled
-decode check of a slice runs in ONE ``mapInPandas`` (``_decode_pass``), so
-the payload bytes cross the JVM->Python boundary once per wave however many
-audio checks are on. Everything else derives from ``CHECKS``:
-``wave_violations`` (re-exported by ``runner``) composes a slice from it,
-``runner._global_key_checks`` runs its non-row-level builders over the
+default, and how it finds its violations in one slice. A row-level check
+gives ``flags``: ``(check, predicate, detail, severity)`` per row. The
+Catalyst row checks (schema, byte_length, encoding, speaking_rate) flag
+the slice's own columns, and all of them evaluate in ONE projection over
+one scan. The decode checks (payload and the audio opt-ins) flag the
+metrics of a per-batch ``kernel``; every enabled decode check of a slice
+runs in ONE ``mapInPandas`` (``_decode_pass``), so the payload bytes cross
+the JVM->Python boundary once per wave however many audio checks are on,
+and one projection flags its rows. Only the two table-wide checks
+(uniqueness, referential) ``build`` their own plan. Everything else derives
+from ``CHECKS``: ``wave_violations`` (re-exported by ``runner``) composes a
+slice from it, ``runner._global_key_checks`` runs the builders over the
 whole table, and ``spec.py`` takes the default ``checks`` tuple and the
 spec-file name validation from it. Adding a check is one entry here plus
 its parameter field on ``SuiteSpec``.
 
-Builders share a no-double-count rule: a defect another check owns (null
+Checks share a no-double-count rule: a defect another check owns (null
 or non-positive metadata, an undecodable payload) is never re-reported.
 Severities rank the final output (SURVEY.md O1).
 """
@@ -40,7 +44,6 @@ from ..operators import (
     remap_key_part,
     schema_check,
     uniqueness,
-    violation_rows,
 )
 
 
@@ -51,30 +54,24 @@ class Check:
     # when key-partitioned, else globally) and streaming micro-batches skip it
     row_level: bool
     default: bool
-    # (slice, ref slice or None, spec, enabled check names) -> violation
-    # rows, for checks that are plain Catalyst
+    # the table-wide checks only: (slice, ref slice or None, spec, enabled
+    # check names) -> violation rows
     build: Callable | None = None
     # skipped on a slice without the reference table
     needs_ref: bool = False
+    # every row-level check: flags(m, spec, checks) lists its (check,
+    # predicate, detail, severity), m(name) resolving each input column. A
+    # Catalyst check's flags read the slice's own columns (m is F.col), and
+    # all of them evaluate in one projection over one scan
+    flags: Callable | None = None
     # decode checks run inside the slice's ONE Python pass (_decode_pass):
     # per Arrow batch of the slice's ``inputs`` columns, kernel(pdf,
-    # **params(spec)) returns the columns declared in ``metrics`` (DDL), and
-    # flags(m, spec) lists the check's (check, predicate, detail, severity)
-    # over them
+    # **params(spec)) returns the columns declared in ``metrics`` (DDL),
+    # which m resolves to
     kernel: Callable | None = None
     inputs: tuple = ("bytes", "codec", "sr_hz")
     params: Callable = lambda spec: {}
     metrics: str = ""
-    flags: Callable | None = None
-
-
-def _src(df: DataFrame, spec) -> DataFrame:
-    # the audits name their key/part columns clip_id/part
-    return remap_key_part(df, spec.schema_spec.key_col, spec.schema_spec.part_col)
-
-
-def _schema(df, ref_df, spec, checks):
-    return schema_check.constraint_violations(df, spec.schema_spec)
 
 
 def _uniqueness(df, ref_df, spec, checks):
@@ -91,7 +88,15 @@ def _referential(df, ref_df, spec, checks):
     )
 
 
-def _byte_length(df, ref_df, spec, checks):
+# flag builders of the Catalyst row checks, over the slice's own columns
+# (m is F.col)
+
+
+def _schema_flags(m, spec, checks):
+    return schema_check.constraint_flags(spec.schema_spec)
+
+
+def _byte_length_flags(m, spec, checks):
     # truncated / oversized / unknown-codec payloads, pure codegen. The
     # schema's allowed-codec constraint owns declared-codec validity when it
     # exists AND the schema check runs; without it unknown codecs would pass
@@ -100,17 +105,17 @@ def _byte_length(df, ref_df, spec, checks):
     skip = ["ok", "bad_meta"]
     if "schema" in checks and any(c.name == "codec" and c.allowed for c in s.columns):
         skip.append("unknown_codec")
-    audit = payload.byte_length_audit(df, key_col=s.key_col, part_col=s.part_col)
+    a = payload.byte_length_cols()
     detail = F.concat(
-        F.col("verdict"),
+        a["verdict"],
         F.lit(": bytes="),
-        F.col("n_bytes").cast("string"),
+        a["n_bytes"].cast("string"),
         F.lit(" expected="),
-        F.coalesce(F.col("expected_bytes").cast("string"), F.lit("?")),
+        F.coalesce(a["expected_bytes"].cast("string"), F.lit("?")),
         F.lit(" delta_samples="),
-        F.coalesce(F.col("delta_samples").cast("string"), F.lit("?")),
+        F.coalesce(a["delta_samples"].cast("string"), F.lit("?")),
     )
-    return violation_rows(audit.where(~F.col("verdict").isin(*skip)), "byte_length", detail, 4.5)
+    return [("byte_length", ~a["verdict"].isin(*skip), detail, 4.5)]
 
 
 _ENCODING_SIGNALS = (
@@ -121,33 +126,28 @@ _ENCODING_SIGNALS = (
 )
 
 
-def _encoding(df, ref_df, spec, checks):
+def _encoding_flags(m, spec, checks):
     # U+FFFD, control chars, UTF-8-as-latin-1 mojibake and in-body BOMs in
     # the text column: the corruption transcript EQUALITY cannot see, since
     # upstream mojibake sits in both copies (functions/text.py signals)
-    t = F.col(spec.encoding_text_col)
-    counted = _src(df, spec).where(t.isNotNull()).select(
-        "clip_id", "part", *[f(t).alias(n) for n, f in _ENCODING_SIGNALS]
-    )
-    names = [n for n, _ in _ENCODING_SIGNALS]
-    detail = F.concat_ws(" ", *[F.concat(F.lit(f"{n}="), F.col(n).cast("string")) for n in names])
-    return violation_rows(
-        counted.where(F.greatest(*names) > 0), "encoding", detail, 3.5
-    )
+    t = m(spec.encoding_text_col)
+    counts = [(n, f(t)) for n, f in _ENCODING_SIGNALS]
+    detail = F.concat_ws(" ", *[F.concat(F.lit(f"{n}="), c.cast("string")) for n, c in counts])
+    bad = t.isNotNull() & (F.greatest(*[c for _, c in counts]) > 0)
+    return [("encoding", bad, detail, 3.5)]
 
 
-def _speaking_rate(df, ref_df, spec, checks):
+def _speaking_rate_flags(m, spec, checks):
     # words/sec outside the bounds: the transcript cannot belong to the clip
     lo, hi = spec.speaking_rate_bounds
-    t, dur = F.col("transcript"), F.col("dur_ms")
+    t, dur = m("transcript"), m("dur_ms")
     # try_divide: ANSI codegen may evaluate wps before the dur > 0 guard
     wps = F.try_divide(F.size(text.words(t)), dur / 1000.0)
     measurable = t.isNotNull() & (F.length(F.trim(t)) > 0) & dur.isNotNull() & (dur > 0)
     detail = F.concat(
         F.lit("wps="), F.round(wps, 2).cast("string"), F.lit(f" outside [{lo}, {hi}]")
     )
-    bad = _src(df, spec).where(measurable & ((wps < lo) | (wps > hi)))
-    return violation_rows(bad, "speaking_rate", detail, 2.5)
+    return [("speaking_rate", measurable & ((wps < lo) | (wps > hi)), detail, 2.5)]
 
 
 def _sampled(spec) -> Column:
@@ -160,11 +160,11 @@ def _sampled(spec) -> Column:
     return bucket < F.lit(int(round(frac * 1_000_000)))
 
 
-# flag builders of the decode checks: (m, spec) -> [(check, predicate,
-# detail, severity)], m(name) naming the check's column in the decode pass
+# flag builders of the decode checks, m(name) naming the check's column in
+# the decode pass
 
 
-def _payload_flags(m, spec):
+def _payload_flags(m, spec, checks):
     flags = payload.payload_flags(m)
     if spec.payload_sample is None:
         return flags
@@ -173,7 +173,7 @@ def _payload_flags(m, spec):
     return [(check, inside & pred, detail, sev) for check, pred, detail, sev in flags]
 
 
-def _loudness_flags(m, spec):
+def _loudness_flags(m, spec, checks):
     # clips that cannot be normalized to the target without hard-clipping
     target, tol = spec.loudness_bounds
     a = media.loudness_cols(m, target, tol)
@@ -187,7 +187,7 @@ def _loudness_flags(m, spec):
     return [("loudness", a["verdict"] == "boost_clips", detail, 3.0)]
 
 
-def _dropout_flags(m, spec):
+def _dropout_flags(m, spec, checks):
     detail = F.concat(
         F.lit("n_dropouts="),
         m("n_dropouts").cast("string"),
@@ -197,7 +197,7 @@ def _dropout_flags(m, spec):
     return [("dropout", m("n_dropouts") > 0, detail, 3.5)]
 
 
-def _codec_sniff_flags(m, spec):
+def _codec_sniff_flags(m, spec, checks):
     detail = F.concat(
         F.lit("declared="),
         m("codec"),
@@ -211,7 +211,7 @@ def _codec_sniff_flags(m, spec):
     return [("codec_sniff", m("suspect_codec"), detail, 4.2)]
 
 
-def _tonal_flags(m, spec):
+def _tonal_flags(m, spec, checks):
     detail = F.concat(
         F.lit("flatness="),
         F.format_number(m("spectral_flatness"), 6),
@@ -221,7 +221,7 @@ def _tonal_flags(m, spec):
     return [("tonal", m("tonal"), detail, 2.5)]
 
 
-def _stutter_flags(m, spec):
+def _stutter_flags(m, spec, checks):
     detail = F.concat(
         F.lit("n_stutters="),
         m("n_stutters").cast("string"),
@@ -235,7 +235,7 @@ def _stutter_flags(m, spec):
 # spec hash: reordering the default entries invalidates all checkpoints).
 # The decode checks (payload and the audio opt-ins) share one Python pass.
 CHECKS = (
-    Check("schema", row_level=True, default=True, build=_schema),
+    Check("schema", row_level=True, default=True, flags=_schema_flags),
     Check("stats", row_level=True, default=True),
     Check("uniqueness", row_level=False, default=True, build=_uniqueness),
     Check("referential", row_level=False, default=True, build=_referential, needs_ref=True),
@@ -246,9 +246,9 @@ CHECKS = (
         inputs=("bytes", "codec", "sr_hz", "dur_ms", "transcript"),
         flags=_payload_flags,
     ),
-    Check("byte_length", row_level=True, default=True, build=_byte_length),
-    Check("encoding", row_level=True, default=True, build=_encoding),
-    Check("speaking_rate", row_level=True, default=False, build=_speaking_rate),
+    Check("byte_length", row_level=True, default=True, flags=_byte_length_flags),
+    Check("encoding", row_level=True, default=True, flags=_encoding_flags),
+    Check("speaking_rate", row_level=True, default=False, flags=_speaking_rate_flags),
     Check(
         "loudness", row_level=True, default=False,
         kernel=media.audio_feature_metrics, metrics=media.AUDIO_FEATURE_METRICS,
@@ -301,8 +301,7 @@ def _decode_pass(df: DataFrame, ref_df, spec, entries: list) -> DataFrame:
     """Every enabled decode check of one slice in ONE ``mapInPandas``: the
     clips cross the JVM->Python boundary once, each check's kernel runs on
     the same Arrow batch, and the pass yields one wide metrics row per clip
-    (columns ``<check>_<metric>``). The violation rows then come from one
-    Catalyst projection over that row (``flagged_violations``).
+    (columns ``<check>_<metric>``), which the checks' flags read.
 
     With payload on, the pass runs over the slice left-joined to the
     reference, so a clip with k ref rows arrives k times: payload rows fan
@@ -314,12 +313,12 @@ def _decode_pass(df: DataFrame, ref_df, spec, entries: list) -> DataFrame:
     matches all reach one task, but not necessarily in a row (a shuffled
     hash join that builds the clip side streams the ref rows)."""
     # the kernels name their key/part columns clip_id/part
+    s = spec.schema_spec
     inputs = ["clip_id", "part"] + [col for c in entries for col in c.inputs]
-    src = _src(df, spec).select(*dict.fromkeys(inputs))
+    src = remap_key_part(df, s.key_col, s.part_col).select(*dict.fromkeys(inputs))
     per_clip = [c for c in entries if not c.needs_ref]
     if any(c.needs_ref for c in entries):
-        key = spec.schema_spec.key_col
-        ref = ref_df.select(F.col(key).alias("clip_id"), *_REF_COLS)
+        ref = ref_df.select(F.col(s.key_col).alias("clip_id"), *_REF_COLS)
         if spec.payload_sample is not None:
             ref = ref.where(_sampled(spec))
             if not per_clip:
@@ -355,36 +354,42 @@ def _decode_pass(df: DataFrame, ref_df, spec, entries: list) -> DataFrame:
             yield keyed_frame(pdf, out, "codec")
 
     metrics = ", ".join(f"{name}_{f}" for name, fs in fields.items() for f in fs)
-    wide = src.mapInPandas(
+    return src.mapInPandas(
         fused_checks_kernel, schema=f"clip_id string, part int, codec string, {metrics}"
     )
-    flags = []
-    for c in entries:
-        # a check's metric n is column <check>_n; codec is the input's
-        m = lambda n, c=c: F.col(n if n == "codec" else f"{c.name}_{n}")  # noqa: E731
-        flags += c.flags(m, spec)
-    return flagged_violations(wide, flags)
 
 
 def wave_violations(
     df: DataFrame, ref_df: DataFrame | None, spec, checks: tuple
 ) -> DataFrame | None:
     """Compose every requested check's violation rows over one slice of the
-    clips table into a single lazy plan: a union with one branch per
-    Catalyst check plus ONE Python pass for all the decode checks. Nothing
-    is cached beneath the union, so each branch scans the slice itself
-    (the default checks scan the clips slice 7 times and the ref slice
-    twice). None when no check applies. Shared by the batch
-    suite's per-wave path, its whole-table key checks and the streaming
-    ingest path (streaming/incremental.py), so batch and ingest-time
-    validation agree check-for-check on the row-level set."""
+    clips table into a single lazy plan: a union of the table-wide checks'
+    own plans, ONE projection that evaluates every Catalyst row check's
+    flags over the slice, and ONE Python pass for all the decode checks
+    with one projection over its rows. Nothing is cached beneath the union,
+    so each branch scans the slice itself (before AQE, the default checks
+    over plain parquet scan the clips slice 5 times and the ref slice
+    twice). None when no check applies. Shared by the batch suite's
+    per-wave path, its whole-table key checks and the streaming ingest path
+    (streaming/incremental.py), so batch and ingest-time validation agree
+    check-for-check on the row-level set."""
     on = [
         c
         for c in CHECKS
         if c.name in checks and (ref_df is not None or not c.needs_ref)
     ]
     parts = [c.build(df, ref_df, spec, checks) for c in on if c.build is not None]
+    row = [c for c in on if c.flags is not None and c.kernel is None]
+    if row:
+        s = spec.schema_spec
+        flags = [f for c in row for f in c.flags(F.col, spec, checks)]
+        parts.append(flagged_violations(df, flags, s.key_col, s.part_col))
     decode = [c for c in on if c.kernel is not None]
     if decode:
-        parts.append(_decode_pass(df, ref_df, spec, decode))
+        flags = []
+        for c in decode:
+            # a check's metric n is column <check>_n; codec is the input's
+            m = lambda n, c=c: F.col(n if n == "codec" else f"{c.name}_{n}")  # noqa: E731
+            flags += c.flags(m, spec, checks)
+        parts.append(flagged_violations(_decode_pass(df, ref_df, spec, decode), flags))
     return reduce(DataFrame.unionByName, parts) if parts else None

@@ -16,10 +16,12 @@ Execution model (SURVEY.md §7.1 steps 2+7):
   sized to keep every executor busy — e.g. hundreds of Iceberg partitions
   per wave; waves exist for checkpoint granularity, not parallelism.)
 - within a wave, all row-level checks compose into one violations plan: a
-  union of lazy per-check DataFrames over the wave slice. Each branch of
-  the union scans the slice itself; nothing is cached beneath the union (the
-  default checks over a key-partitioned table scan the clips slice 7 times
-  and the ref slice twice). The union's RESULT is persisted, so the exact
+  union of the table-wide checks' plans, one projection of every Catalyst
+  row check's flags and one Python pass for the decode checks, all over
+  the wave slice. Each branch of the union scans the slice itself; nothing
+  is cached beneath the union (before AQE, the default checks over a
+  key-partitioned plain-parquet table scan the clips slice 5 times and the
+  ref slice twice). The union's RESULT is persisted, so the exact
   per-check counts and the capped sink write compute it once. One more
   aggregate over the slice computes the stats and drift histograms.
 
@@ -79,8 +81,8 @@ class KilledMidRun(RuntimeError):
 
 
 # the checks a table whose partition column is not a key function cannot
-# decide per wave (uniqueness, referential)
-_KEY_CHECKS = tuple(c for c in CHECKS if c.build is not None and not c.row_level)
+# decide per wave (uniqueness, referential): the entries with a ``build``
+_KEY_CHECKS = tuple(c for c in CHECKS if c.build is not None)
 
 
 def _global_key_checks(

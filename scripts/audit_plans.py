@@ -628,10 +628,11 @@ def bucketed_payload_plans(spark) -> dict[str, str]:
         bucketed = plan_of(payload.payload_report(cb, rb))
         parquet = plan_of(payload.payload_report(clips, ref))
 
-        # the WHOLE per-wave violations plan (schema + salted uniqueness +
-        # referential anti-joins + payload + byte_length + encoding composed
-        # over one scan): HashPartitioning(clip_id) from the bucketed scans
-        # satisfies the clustering requirement of every agg and join in it
+        # the WHOLE per-wave violations plan (salted uniqueness, the
+        # referential full outer join, one projection of the schema +
+        # byte_length + encoding flags, and the payload pass):
+        # HashPartitioning(clip_id) from the bucketed scans satisfies the
+        # clustering requirement of every agg and join in it
         from audit_anomaly_detection_etl_spark.plans.runner import (
             wave_violations,
         )
@@ -648,6 +649,7 @@ def bucketed_payload_plans(spark) -> dict[str, str]:
             "parquet": parquet,
             "wave_bucketed": wave_b,
             "wave_parquet": wave_p,
+            "wave_default_shape": wave_p,
             "wave_all_checks": wave_all,
             "wave_all_bucketed": wave_all_b,
         }
@@ -690,11 +692,22 @@ EXTRA_RULES = [
         lambda p: _nodes(p, "Exchange") >= 6,
     ),
     (
+        "wave_default_shape",
+        "the default wave plan over plain parquet, before AQE: at most 7 "
+        "scans (clips 5: uniqueness 2, referential 1, the Catalyst row flags "
+        "1, payload 1; ref 2) and at most 6 shuffle Exchanges (uniqueness 2, "
+        "the referential full outer join 2, the payload join 2)",
+        lambda p: _nodes(p, "Scan parquet") <= 7 and _nodes(p, "Exchange") <= 6,
+    ),
+    (
         "wave_all_checks",
         "wave plan with EVERY check in ALL_CHECKS over plain parquet: the six "
         "decode checks (payload, loudness, dropout, codec_sniff, tonal, "
-        "stutter) share exactly ONE MapInPandas and there is no BatchEvalPython",
-        lambda p: _nodes(p, "MapInPandas") == 1 and "BatchEvalPython" not in p,
+        "stutter) share exactly ONE MapInPandas, the four Catalyst row checks "
+        "ONE projection (at most 7 scans), and there is no BatchEvalPython",
+        lambda p: _nodes(p, "MapInPandas") == 1
+        and _nodes(p, "Scan parquet") <= 7
+        and "BatchEvalPython" not in p,
     ),
     (
         "wave_all_bucketed",

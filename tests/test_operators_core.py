@@ -77,14 +77,42 @@ def test_uniqueness_salt_invariance(spark, clips):
     assert sorted(map(tuple, a.values.tolist())) == sorted(map(tuple, b.values.tolist()))
 
 
-@pytest.mark.parametrize("broadcast", [True, False])
-def test_referential_both_directions(spark, clips, clip_dir, expected, broadcast):
+def test_referential_both_directions(spark, clips, clip_dir, expected):
     ref = spark.read.parquet(os.path.join(clip_dir, "clips_ref"))
-    v = referential.referential_violations(clips, ref, broadcast=broadcast).toPandas()
+    v = referential.referential_violations(clips, ref).toPandas()
     exp_missing = set(expected[expected.check == "referential_missing_ref"].clip_id)
     exp_orphan = set(expected[expected.check == "referential_orphan_ref"].clip_id)
     assert set(v[v.check == "referential_missing_ref"].key) == exp_missing
     assert set(v[v.check == "referential_orphan_ref"].key) == exp_orphan
+
+
+def test_referential_join_edge_cases(spark):
+    """Null keys match nothing and stay on their own side; a key present on
+    both sides (duplicated or not) gives no row; k unmatched duplicate clip
+    rows give k missing_ref rows; a ref side without ``part`` gives
+    null-part orphans."""
+    clips = spark.createDataFrame(
+        [("a", 0), ("a", 0), (None, 1), ("m", 2), ("m", 2), ("m", 2), ("b", 3)],
+        "clip_id string, part int",
+    )
+    ref = spark.createDataFrame(
+        [("a", 0), ("a", 0), ("b", 3), (None, 1), ("o", 5)],
+        "clip_id string, part int",
+    )
+    missing = ("referential_missing_ref", "clip has no reference row")
+    orphan = ("referential_orphan_ref", "reference row has no clip")
+
+    def rows(r):
+        v = referential.referential_violations(clips, r).collect()
+        return sorted((tuple(x) for x in v), key=repr)
+
+    want = [(None, *missing, 1, 2.0)] + [("m", *missing, 2, 2.0)] * 3
+    assert rows(ref) == sorted(
+        want + [(None, *orphan, 1, 1.0), ("o", *orphan, 5, 1.0)], key=repr
+    )
+    assert rows(ref.drop("part")) == sorted(
+        want + [(None, *orphan, None, 1.0), ("o", *orphan, None, 1.0)], key=repr
+    )
 
 
 def test_schema_check_diff_and_domain(spark, clips, clips_pdf):
