@@ -77,8 +77,14 @@ def test_uniqueness_salt_invariance(spark, clips):
     assert sorted(map(tuple, a.values.tolist())) == sorted(map(tuple, b.values.tolist()))
 
 
-def test_referential_both_directions(spark, clips, clip_dir, expected):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_referential_both_directions(spark, clips, clip_dir, expected, broadcast):
+    """A broadcast hint on the reference side leaves the rows unchanged: a
+    full outer join cannot broadcast, so Spark plans a shuffle join either
+    way."""
     ref = spark.read.parquet(os.path.join(clip_dir, "clips_ref"))
+    if broadcast:
+        ref = F.broadcast(ref)
     v = referential.referential_violations(clips, ref).toPandas()
     exp_missing = set(expected[expected.check == "referential_missing_ref"].clip_id)
     exp_orphan = set(expected[expected.check == "referential_orphan_ref"].clip_id)
